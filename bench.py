@@ -2,7 +2,9 @@
 
 Prints ONE JSON line:
   {"metric": "headline_total_warm", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "queries": {name: sec, ...}, "sf": <sf>, "cpus": N,
+   "master": "local[N]", "default_parallelism": N,
+   "codegen_cache_max_entries": N, ...}
 
 Three untimed warm-up PASSES over the whole query set (plan +
 whole-stage-codegen JIT — measured to keep improving past the first
@@ -348,6 +350,14 @@ def main() -> None:
         "queries": timings,
         "skipped": skipped,
         "sf": _sf_from_dir(SF_DIR),
+        # Self-report of the recording's compute, so a reader can rule
+        # on a contention or core-count flag from the artifact alone.
+        "cpus": len(os.sched_getaffinity(0)),
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "codegen_cache_max_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")
+        ),
     }
     payload["scale"] = _scale_story(spark, names)
 

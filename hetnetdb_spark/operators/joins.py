@@ -515,7 +515,8 @@ def j14_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerates to a cross product; the first discipline is to BLOCK
     on a time bucket that bounds the overlap scope (the day) — J8's
     equi+residual shape lifted to intervals. But the block key here
-    is DAY alone: every user shares the same ~30 day blocks, so the
+    is DAY alone: every user shares the same ~30 day blocks (30
+    distinct event days at sf0.001, sf0.01 and sf0.1), so the
     blocked join still evaluates (users/day)^2 residual pairs per
     block at ANY corpus size — quadratic inside the block even
     though the output is one count per day.
@@ -540,7 +541,10 @@ def j14_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPTIMIZATION_r16.md. Intervals that may CROSS buckets would
     need explode-to-every-covered-bucket first (L23's band
     pattern); these day-grouped spans can't cross by
-    construction."""
+    construction. A day with no overlapping pair (one user, or only
+    disjoint spans) sums to 0 here but has no row in the oracle's
+    inner self-join, so those days are dropped
+    (tests/test_j14_edge.py)."""
     (events,) = load_tables(spark, sf_dir, "events")
     iv = events.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
@@ -579,6 +583,7 @@ def j14_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         contrib.filter(F.col("is_end") == 0)
         .groupBy("day")
         .agg(F.sum("active_before").alias("n_overlapping_pairs"))
+        .where(F.col("n_overlapping_pairs") > 0)
     )
 
 

@@ -110,8 +110,27 @@ def _micros(c: "F.Column") -> "F.Column":
     throws ARITHMETIC_OVERFLOW on any actual long-sum wrap, and q1's
     conservative count×max sentinel trips earlier with a pointer at
     the DECIMAL twin (tests/test_tpch_q1_twins.py pins both).
+
+    The rounding (``_round_half_up``) never boxes. ``F.round`` on
+    a double compiles to ``BigDecimal.valueOf(x).setScale(0,
+    HALF_UP)``, and a JFR profile of warm headline passes (sf0.1, 4
+    cores) put 17.5% of all executor CPU samples there, inside q1's
+    aggregate stage. ``rint`` agrees with ``round`` on every finite
+    double except exact ``.5`` ties, which ``rint`` sends to even and
+    the ``when`` sends away from zero; ``x ± 0.5`` is exact there
+    because a double with a ``.5`` fraction is below 2^52.
+    tests/test_micros_rounding.py pins the two bit for bit on
+    adversarial doubles. q1's aggregate had been on the
+    do-not-re-attack list; that JFR profile is the new per-layer
+    evidence that took it off.
     """
-    return F.round(c * 1000000).cast("bigint")
+    return _round_half_up(c * 1000000).cast("bigint")
+
+
+def _round_half_up(x: "F.Column") -> "F.Column":
+    """``F.round(x)`` for a double, in primitive double arithmetic."""
+    r = F.rint(x)
+    return F.when(F.abs(x - r) == 0.5, x + F.signum(x) * 0.5).otherwise(r)
 
 
 #: int64 headroom the overflow sentinel asserts against — half of

@@ -73,6 +73,21 @@ SESSION_CONF: dict[str, str] = {
 }
 
 
+#: Size of Spark's generated-class cache (static conf
+#: ``spark.sql.codegen.cache.maxEntries``; Spark's default is 100).
+#: The cache is LRU and the engine's working set is larger than the
+#: default: the 8 headline queries compile 119 classes, the
+#: serve-mixed benchmark workload 343. Repeated passes cycle through
+#: the same queries, so at 100 entries every class was evicted before
+#: its next use and each warm headline pass recompiled 87-90 classes
+#: with Janino (sf0.1, 4 cores), losing their JIT warm-up as well. At
+#: 1000 (about 3x serve's working set) warm passes compile 0 classes;
+#: tests/test_codegen_cache.py pins that. Only sessions built by
+#: ``get_spark`` get it: a session handed to ``configure`` already
+#: exists, and static confs cannot change after start.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
+
+
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine conf to an existing session.
 
@@ -103,6 +118,8 @@ def get_spark(app_name: str = "hetnetdb-spark") -> SparkSession:
         .master(f"local[{cpus}]")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Static conf, so it lives here and not in SESSION_CONF.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     for k, v in SESSION_CONF.items():
         builder = builder.config(k, v)
