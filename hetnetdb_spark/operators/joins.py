@@ -535,10 +535,10 @@ def j14_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER start-points at the same timestamp (a.t1 == b.t0 is still
     an overlap, inclusive bounds), and equal t0s order by user so
     each pair is counted exactly once, at the later (t0, user).
-    Frame-identical to the join spelling at sf0.001/0.01/0.1
-    (tools/decompose_tail_r16.py); same-session rotated A/B
-    med 2.12 -> 1.15 s, fresh-process min3 below in
-    OPTIMIZATION_r16.md. Intervals that may CROSS buckets would
+    Frame-identical to the join spelling at sf0.001/0.01/0.1;
+    same-session rotated A/B med 2.12 -> 1.15 s, fresh-process min3
+    in OPTIMIZATION_r16.md §7 "Next-tier sweep" (script removed; see
+    git 195aa75). Intervals that may CROSS buckets would
     need explode-to-every-covered-bucket first (L23's band
     pattern); these day-grouped spans can't cross by
     construction. A day with no overlapping pair (one user, or only

@@ -87,7 +87,8 @@ def l01_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       grouping device), not the md5 hex string: primitive group
       keys hash-aggregate fastest, and the shuffle row is
       (8+8+8 bytes); text never leaves the scan. Fresh-process A/B
-      at 300x (tools/l01_experiment.py, 3 procs/variant): xx-pair
+      at 300x (PLANS.md "l01 keeper: sort-window -> numeric hash
+      aggregate"; script removed; see git 195aa75): xx-pair
       partial-agg 3.07 s best vs 3.27 (md5 partial) / 3.57 (md5 +
       explicit repartition) / 3.94 (xx + repartition). The explicit
       repartition-before-groupBy idea (skip the useless map-side
@@ -2046,7 +2047,8 @@ def l68_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same membership test (count over the g partition ≡ the agg's
     # count), so rows are identical; fresh-process A/B at 30×:
     # min3 26.3/23.0 → 17.4/15.5 s, and a dead tie at sf0.1 where
-    # the shuffle is too small to matter (tools/decompose_l68.py).
+    # the shuffle is too small to matter (OPTIMIZATION_r16.md §4
+    # "l68_dup_span_removal"; script removed; see git 195aa75).
     w_g = Window.partitionBy("g")
     hits = (
         grams.withColumn("cnt", F.count(F.lit(1)).over(w_g))

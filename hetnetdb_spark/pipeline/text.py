@@ -558,7 +558,9 @@ def l14_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     item): the r12 fold carried a (prev-token STRING, run, maxrun)
     STRUCT accumulator, and fresh JVMs flapped 2.3 s ↔ 14 s at the
     300× corpus on an identical plan — sticky per process, never
-    transitioning. Measured diagnosis (tools/l14_experiment.py):
+    transitioning. Measured diagnosis (PLANS.md "l14 bimodality:
+    mechanism isolated, expression stabilized"; script removed; see
+    git 195aa75):
     the flap is NOT a whole-stage-codegen fallback — it persists
     bit-for-bit with spark.sql.codegen.wholeStage=false (11.6-11.8 s
     slow procs, one 2.65 s fast proc) — it is C2 JIT profile

@@ -278,6 +278,11 @@ RECHECK_THIS_ROUND: frozenset[str] = frozenset(
         # Both q1 and j14 were rewritten again after r16, oracles
         # unchanged: q1's _micros rounds without BigDecimal, and j14
         # drops days with no overlapping pair. They stay listed.
+        #
+        # u07 sums exact integer micros on both sides (its oracle
+        # changed too); its 6dp-rounded double sum missed by one ulp
+        # on generated data:
+        "u07_arrow_python_udf",
     }
 )
 

@@ -27,6 +27,7 @@ from pyspark.sql.functions import pandas_udf, udf, udtf
 
 from hetnetdb_spark.catalog import load_tables
 from hetnetdb_spark.expr import r6
+from hetnetdb_spark.operators.tpch import _micros
 from hetnetdb_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -259,8 +260,8 @@ def u06_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 U7_ORACLE = """
 SELECT l_returnflag,
        CAST(COUNT(*) AS BIGINT) AS n_lines,
-       ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 6)
-         AS total_charge
+       SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1e6)
+                AS BIGINT)) / 1e6 AS total_charge
 FROM lineitem
 GROUP BY l_returnflag
 """
@@ -275,6 +276,16 @@ def u07_arrow_python_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     path for existing row UDFs that can't be vectorized. Still
     Python-per-row inside the batch, so built-ins/pandas_udf remain
     the hot-path choice; this certifies the surface end-to-end.
+
+    ``total_charge`` sums exact integer micro-units (q1's ``_micros``)
+    and divides back once. Per-group totals are ~1e9 at sf0.01, and
+    rounding a double SUM to 6 decimals there asks for 16 significant
+    digits, so the two engines' summation orders differed in the last
+    place (generated seed 103: ...383382 vs ...383383). The oracle
+    spells the same per-row product in the same IEEE operation order
+    and rounds it half away from zero like ``_round_half_up``, so the
+    BIGINT sums agree exactly; a long-sum overflow raises under ANSI
+    mode (q1's envelope, ~sf 10 per group).
     """
 
     @udf("double", useArrow=True)
@@ -290,7 +301,12 @@ def u07_arrow_python_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            r6(F.sum("c")).alias("total_charge"),
+            F.sum(_micros(F.col("c"))).alias("_m"),
+        )
+        .select(
+            "l_returnflag",
+            "n_lines",
+            r6((F.col("_m") / 1000000).cast("double")).alias("total_charge"),
         )
     )
 

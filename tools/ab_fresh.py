@@ -1,18 +1,27 @@
-"""Fresh-process A/B for r16 variant adjudications.
+"""Fresh-process A/B of query variants: the one variant A/B harness.
 
-Protocol (the r15 letters_ab / crossover protocol, generalized): each
-draw is ONE fresh subprocess that builds ONE variant via a
-`module:function` spec, runs it cold once, then min-of-3 timed passes
-(fresh QueryExecution per pass, noop sink). Variants alternate across
+Protocol: each draw is ONE fresh subprocess that builds ONE variant
+from a spec, runs it cold once, then min-of-3 timed passes (fresh
+QueryExecution per pass, noop sink). Variants alternate across
 subprocesses (A B A B ...) so box drift lands on both arms. Reported
 per variant: per-process [cold, min3] plus the min across processes —
 the recorded protocol number.
 
 Usage:
-    python tools/ab_fresh_r16.py PROCS_PER_ARM SPEC [SPEC ...]
-    python tools/ab_fresh_r16.py --worker SPEC        (internal)
+    python tools/ab_fresh.py PROCS_PER_ARM SPEC [SPEC ...]
+    python tools/ab_fresh.py --worker SPEC        (internal)
 
-SPEC examples: decompose_l68:_full  decompose_l68:_full_uw
+A SPEC is either
+    registry:<name>    a registered query, built at $SPARK_GRAFT_SF_DIR
+                       (default: the sf0.1 fixtures), or
+    module:function    any module importable from PYTHONPATH, the
+                       repo root or tools/, whose function takes the
+                       SparkSession and returns the DataFrame to time.
+
+SPEC examples: registry:j14_interval_overlap_join  my_variants:j14_join
+
+For where one variant's time goes (build, Catalyst, executor stages,
+scheduling, fetch), run it through perfbench/batch.py --trace-out.
 """
 
 from __future__ import annotations
