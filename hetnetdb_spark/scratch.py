@@ -16,11 +16,12 @@ never collide. Dead processes' dirs are reaped on import by checking
 reap is skipped and dirs accumulate until a manual clean — harmless,
 they are gitignored).
 
-tools/llm_slope.py intentionally does NOT use the pid-keyed root:
-its grown corpora are cached across runs via _SUCCESS markers and
-rebuilding them per-process would defeat that cache. Its dirs live
-directly under ``.scratch/`` with non-``pid`` names, which the
-reaper never touches.
+tools/grown.py (the scale tools' corpora) and
+tools/stream_state_slope.py intentionally do NOT use the pid-keyed
+root: their grown corpora are cached across runs via _SUCCESS
+markers and rebuilding them per-process would defeat that cache.
+Their dirs live directly under ``.scratch/`` with non-``pid`` names,
+which the reaper never touches.
 """
 
 from __future__ import annotations

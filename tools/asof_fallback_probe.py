@@ -5,11 +5,11 @@ range-join + row_number formulation.
 j09/j15's docstrings claim that for heavily skewed users the
 alternative to the bounded range join is a per-key merge_asof at
 the cost of an Arrow crossing. This probe makes that claim
-load-bearing: both formulations run at 1x (sf0.1) and 10x
-(scale_smoke replica), results are asserted IDENTICAL, and both
-are timed — so the crossover economics (range join wins at uniform
-density, merge_asof caps the per-key intermediate at skew) are
-measured, not asserted.
+load-bearing: both formulations run at 1x (sf0.1) and 10x (the
+tools/grown.py verbatim replica), results are asserted IDENTICAL,
+and both are timed — so the crossover economics (range join wins at
+uniform density, merge_asof caps the per-key intermediate at skew)
+are measured, not asserted.
 
 Run: python tools/asof_fallback_probe.py
 """
@@ -94,12 +94,10 @@ def main() -> None:
     spark = get_spark("asof-fallback-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from tools.scale_smoke import OUT, replicate
-
-    replicate(spark)
+    from tools import grown
 
     report = {}
-    for tag, sf_dir in (("1x", os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")), ("10x", OUT)):
+    for tag, sf_dir in (("1x", grown.BASE), ("10x", grown.corpus(grown.BASE, 10, "verbatim", spark))):
         join_df = registry.QUERIES["j15_asof_tolerance"](spark, sf_dir)
         merge_df = asof_merge_fallback(spark, sf_dir)
 

@@ -8,17 +8,22 @@ is touched, while DuckDB's floor is ~1 ms. That comparison answers
 "who should serve 600k-row interactive queries" — not the question
 this engine is built for. This tool measures the question that DOES
 matter at the 100 TB posture: how the two engines' wall clocks move
-as the same queries run over 10x/30x/100x replicas of the fixture
-(tools/scale_smoke.py corpora, facts replicated with offset ids,
-dims copied through).
+as the same queries run over grown replicas of the fixture
+(tools/grown.py corpora).
 
-Method, symmetric by construction: per factor, per engine, one cold
-run then min-of-3 timed runs of the full query (Spark: the registry
-callable — a FRESH QueryExecution per invocation since the round-10
-stage-reuse fix — fetched via Arrow toPandas; DuckDB: the SAME
-query's registered oracle SQL over views on the SAME parquet files,
-fetched via fetchdf; both engines see all 32 cores). Neither engine
-gets result/stage caching; both pay parse/plan per run.
+Method, symmetric by construction: per factor and query, both arms
+run through tools/ab_fresh.py — `registry:<query>` (the registry
+callable, a FRESH QueryExecution per invocation, fetched via Arrow
+toPandas) and `duck:<query>` (the SAME query's registered oracle SQL
+over views on the SAME parquet files, fetched via fetchdf), each in
+PROCS fresh processes, cold then min-of-3, arms alternating, the
+ab_fresh runaway cap on both. Neither engine gets result/stage
+caching; both pay parse/plan per run. The recorded wall is the min
+over processes at EVERY factor: round 11's resident-session walls
+were contaminated at large factors (window_top3 read 9.55 s inside a
+resident sweep vs 4.91 s isolated at the same HEAD, the q1–q5 legs
+before it having churned the shared heap), so no resident mode
+remains.
 
 Reading it: the per-factor ratio spark/duck falling toward and
 through 1.0 as the corpus grows is the design claim made measurable
@@ -27,32 +32,60 @@ machinery takes over, which is the only regime a 1000-executor
 deployment ever runs in. Factors where DuckDB wins are reported
 as-is; at fixture scale they are expected and honest.
 
+Settings (environment):
+    SPARK_GRAFT_SF_DIR                 base corpus (default sf0.1)
+    SPARK_GRAFT_SMOKE_FACTS            growth law (tools/grown.py):
+                                       unset = verbatim, documents,
+                                       embeddings or mutated
+    SPARK_GRAFT_CROSSOVER_FACTORS      default 1,10,30
+    SPARK_GRAFT_CROSSOVER_QUERIES      default: the 8 headline queries
+    SPARK_GRAFT_CROSSOVER_ISO_PROCS    fresh processes per arm, default 3
+    SPARK_GRAFT_CROSSOVER_OUT          JSON file to merge the summary into
+    SPARK_GRAFT_CROSSOVER_FAMILY       its family key, default headline
+
 Usage:
     python tools/engine_crossover.py                # factors 1,10,30
-    SPARK_GRAFT_CROSSOVER_FACTORS=1,10,30,100 python tools/engine_crossover.py
-    SPARK_GRAFT_CROSSOVER_OUT=SCALE_STORY.json python tools/engine_crossover.py
-Prints one JSON line per (factor, engine, query) plus a summary.
-Artifacts: CROSSOVER_r{N}.txt at the repo root (committed per
-round), and — with SPARK_GRAFT_CROSSOVER_OUT set — the same summary
-as a machine-readable JSON file. That file is what
-`tools/scale_gate.py` checks and what `bench.py` embeds in its
-per-round JSON (the r10 verdict's ask: the scale story as a
-recorded, machine-checked gate, not side-artifact prose). When the
-out-file already exists, this run's factors MERGE into it, so the
-headline and pipeline legs can be recorded by separate invocations.
+    SPARK_GRAFT_CROSSOVER_FACTORS=1,10,30,100,300 \
+      SPARK_GRAFT_CROSSOVER_OUT=SCALE_STORY.json python tools/engine_crossover.py
+
+Heavy-tail families (each quadratic-law operator stops where its pair
+space does — documented, not silently truncated; the cap bounds any
+factor that runs away):
+
+    # l68/l19: linear in chars, on the salted documents-fact corpus
+    SPARK_GRAFT_SMOKE_FACTS=documents SPARK_GRAFT_CROSSOVER_FAMILY=heavy_docs \
+      SPARK_GRAFT_CROSSOVER_QUERIES=l68_dup_span_removal,l19_decontamination \
+      SPARK_GRAFT_CROSSOVER_FACTORS=30,100,300 SPARK_GRAFT_CROSSOVER_ISO_PROCS=1 \
+      SPARK_GRAFT_CROSSOVER_OUT=SCALE_STORY_heavy.json python tools/engine_crossover.py
+    # l04_tuned: candidates ~3% of N^2/2, quadratic by design (the
+    # PLANS.md banding law; 300x would be ~5e9 pairs). l73 at fixed
+    # K=8: per-cluster pairs N^2/K, so its slope stops at 30x and the
+    # cap ends its 100x leg after one cold run.
+    SPARK_GRAFT_SMOKE_FACTS=embeddings SPARK_GRAFT_CROSSOVER_FAMILY=heavy_emb \
+      SPARK_GRAFT_CROSSOVER_QUERIES=l04_simjoin_lsh_tuned,l73_semantic_dedup_refined \
+      SPARK_GRAFT_CROSSOVER_FACTORS=10,30,100 SPARK_GRAFT_CROSSOVER_ISO_PROCS=1 \
+      SPARK_GRAFT_CROSSOVER_OUT=SCALE_STORY_heavy.json python tools/engine_crossover.py
+
+Prints one JSON line per (factor, query) plus a summary. With
+SPARK_GRAFT_CROSSOVER_OUT set, the summary is merged into that JSON
+file after every factor (a crashed leg loses at most the factor in
+flight). SCALE_STORY.json is what `tools/scale_gate.py` checks and
+what `bench.py` embeds in its JSON; when the file already exists,
+this run's factors MERGE into it, so the headline and pipeline legs
+can be recorded by separate invocations.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
+
+import ab_fresh  # noqa: E402
+import grown  # noqa: E402
 
 FACTORS = [
     int(s)
@@ -73,292 +106,64 @@ QUERIES = [
     "emb_topk_cosine",
 ]
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+LAW = os.environ.get("SPARK_GRAFT_SMOKE_FACTS") or "verbatim"
+
+#: r13: 2 -> 3 — with the recorded ratio isolated-only, a third fresh
+#: process is the cheap insurance against every process landing on
+#: the slow JIT mode (see tools/ab_fresh.py).
+PROCS = int(os.environ.get("SPARK_GRAFT_CROSSOVER_ISO_PROCS", "3"))
+
+PROTOCOL = (
+    "symmetric, isolated at every factor: per factor/engine/query "
+    "tools/ab_fresh.py draws (one fresh process each: cold run then "
+    "min-of-3 full re-executions, fresh QueryExecution / fresh DuckDB "
+    "execute, result fetched to pandas), same parquet files, all "
+    "cores; the recorded wall is the min over {procs} processes per "
+    "arm; a cold run over {cap} s records its cold wall flagged capped"
+)
 
 
-def _corpus(factor: int) -> str:
-    """Fixture dir for factor 1, else scale_smoke's cached Nx corpus."""
-    base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if factor == 1:
-        return base
-    os.environ["SPARK_GRAFT_SCALE_FACTOR"] = str(factor)
-    # scale_smoke reads FACTOR at import; force a fresh module per factor.
-    sys.modules.pop("scale_smoke", None)
-    import scale_smoke  # noqa: PLC0415
-
-    from hetnetdb_spark.session import get_spark  # noqa: PLC0415
-
-    if not all(
-        os.path.exists(os.path.join(scale_smoke.OUT, f"{t}.parquet"))
-        for t in scale_smoke.TABLE_NAMES
-    ):
-        spark = get_spark(f"crossover-build-{factor}")
-        spark.sparkContext.setLogLevel("ERROR")
-        scale_smoke.replicate(spark)
-        spark.stop()
-    return scale_smoke.OUT
-
-
-#: Runaway cap, applied SYMMETRICALLY to both engines (r12 — the r10
-#: cap covered DuckDB only): a query whose COLD run exceeds the cap
-#: records that cold wall (flagged "capped") instead of burning 3
-#: more runs. For Spark the cold wall includes JIT warm-up, so the
-#: treatment can only OVERSTATE the Spark-side cost — conservative
-#: in the same direction the DuckDB cap is for DuckDB.
-CAP_S = float(os.environ.get("SPARK_GRAFT_CROSSOVER_DUCK_CAP_S", "0"))
-
-
-def _spark_times(corpus: str, factor: int) -> dict[str, float]:
-    from hetnetdb_spark import registry  # noqa: PLC0415
-    from hetnetdb_spark.session import get_spark  # noqa: PLC0415
-
-    registry.load_all()
-    spark = get_spark(f"crossover-{factor}")
-    spark.sparkContext.setLogLevel("ERROR")
-    out: dict[str, float] = {}
-    try:
-        for name in QUERIES:
-            fn = registry.QUERIES[name]
-            try:
-                t0 = time.perf_counter()
-                fn(spark, corpus).toPandas()  # cold: JIT + page cache
-                cold = time.perf_counter() - t0
-                capped = bool(CAP_S) and cold > CAP_S
-                if capped:
-                    best = cold
-                else:
-                    best = float("inf")
-                    for _ in range(3):
-                        t0 = time.perf_counter()
-                        fn(spark, corpus).toPandas()
-                        best = min(best, time.perf_counter() - t0)
-            except Exception as exc:  # noqa: BLE001 — one leg must not
-                # sink the whole run's measurements (r12: an OOM in
-                # the 300x l02 leg lost four factors of data)
-                print(
-                    json.dumps(
-                        {
-                            "factor": factor,
-                            "engine": "spark",
-                            "query": name,
-                            "error": str(exc)[:200],
-                        }
-                    ),
-                    flush=True,
-                )
-                continue
-            out[name] = round(best, 4)
-            rec = {"factor": factor, "engine": "spark", "query": name, "warm_s": out[name]}
-            if capped:
-                rec["capped"] = True
-            print(json.dumps(rec), flush=True)
-    finally:
-        spark.stop()
-    return out
+def summarize(draws: dict[str, list[dict]], queries: list[str]) -> dict:
+    """One factor's entry from `ab_fresh.draws` records keyed by
+    ``registry:<q>`` / ``duck:<q>``. Totals and the set ratio cover
+    only queries BOTH engines completed — a failed leg is listed in
+    ``failed_queries``, never silently averaged away."""
+    spark = {q: ab_fresh.best(draws.get(f"registry:{q}", [])) for q in queries}
+    duck = {q: ab_fresh.best(draws.get(f"duck:{q}", [])) for q in queries}
+    both = [q for q in queries if spark[q] is not None and duck[q] is not None]
+    s_tot = round(sum(spark[q] for q in both), 4)
+    d_tot = round(sum(duck[q] for q in both), 4)
+    entry = {
+        "ratio_basis": "isolated-only",
+        "per_query_spark_isolated_s": {q: v for q, v in spark.items() if v is not None},
+        "per_query_duckdb_s": {q: v for q, v in duck.items() if v is not None},
+        "proc_walls": {s: [r.get("wall") for r in recs] for s, recs in draws.items()},
+        "spark_total_s": s_tot,
+        "duckdb_total_s": d_tot,
+        "ratio": round(s_tot / d_tot, 3) if d_tot > 0 else None,
+        "per_query_ratio": {
+            q: round(spark[q] / duck[q], 3) if duck[q] > 0 else None for q in both
+        },
+    }
+    capped = sorted(s for s, recs in draws.items() if any(r.get("capped") for r in recs))
+    if capped:
+        entry["capped"] = capped
+    failed = [q for q in queries if q not in both]
+    if failed:
+        entry["failed_queries"] = failed
+    return entry
 
 
-#: Factors at or above this run an additional ISOLATED Spark pass:
-#: one fresh PROCESS (hence fresh JVM heap) per query, cold +
-#: min-of-3. Round 11's resident-session protocol contaminated
-#: large-factor legs — window_top3 read 9.55 s inside the resident
-#: sweep vs 4.91 s isolated at the same HEAD (the q1–q5 legs before
-#: it had churned the shared heap) — so the recorded ratio at these
-#: factors is computed from the isolated walls, with the resident
-#: walls kept alongside so the artifact shows both (VERDICT r11
-#: items 1 and 5). `spark.stop()` would NOT be isolation: the py4j
-#: JVM survives a session stop, heap and JIT state included.
-ISO_MIN_FACTOR = int(os.environ.get("SPARK_GRAFT_CROSSOVER_ISO_MIN_FACTOR", "100"))
-
-
-def _worker(query: str, corpus: str, runs: int) -> int:
-    """Isolated-leg worker: fresh process, one query, min-of-N."""
-    from hetnetdb_spark import registry  # noqa: PLC0415
-    from hetnetdb_spark.session import get_spark  # noqa: PLC0415
-
-    registry.load_all()
-    spark = get_spark("crossover-isolated")
-    spark.sparkContext.setLogLevel("ERROR")
-    fn = registry.QUERIES[query]
-    t0 = time.perf_counter()
-    fn(spark, corpus).toPandas()  # cold: JIT + page cache
-    cold = time.perf_counter() - t0
-    if CAP_S and cold > CAP_S:
-        print(json.dumps({"query": query, "warm_s": round(cold, 4), "capped": True}))
-        return 0
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn(spark, corpus).toPandas()
-        best = min(best, time.perf_counter() - t0)
-    print(json.dumps({"query": query, "warm_s": round(best, 4)}))
-    return 0
-
-
-#: Fresh PROCESSES per isolated leg (min across them). One process is
-#: not enough: a JVM's interpreted-expression hot path is subject to
-#: profile pollution — whether the megamorphic eval call sites inline
-#: the right concrete classes is decided by early profiling order and
-#: is then STICKY for process lifetime. Measured on l14 (higher-order
-#: fold, identical plan, fresh process each): 300x walls flapped
-#: 2.2-2.5 s <-> 13.9-15.1 s across processes and NEVER transitioned
-#: within one (8 warm passes stayed slow). Min over N fresh processes
-#: is the honest estimator of the plan's cost; the flap itself is
-#: recorded data (all attempts printed).
-#: r13: default raised 2 -> 3 — with the recorded ratio now
-#: isolated-ONLY (no resident fallback), a third fresh process is the
-#: cheap insurance against both processes landing on the slow JIT mode.
-ISO_PROCS = int(os.environ.get("SPARK_GRAFT_CROSSOVER_ISO_PROCS", "3"))
-
-
-def _spark_isolated_times(corpus: str, factor: int) -> dict[str, float]:
-    out: dict[str, float] = {}
-    for name in QUERIES:
-        best: float | None = None
-        capped = False
-        attempts: list[float] = []
-        err = None
-        for _ in range(max(1, ISO_PROCS)):
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--worker", name, corpus, "3"],
-                capture_output=True,
-                text=True,
-                cwd=REPO,
-            )
-            if proc.returncode != 0:
-                err = proc.stderr.strip().splitlines()[-1][:200] if proc.stderr.strip() else "worker died"
-                continue
-            rec = json.loads(proc.stdout.strip().splitlines()[-1])
-            attempts.append(rec["warm_s"])
-            if best is None or rec["warm_s"] < best:
-                best = rec["warm_s"]
-            if rec.get("capped"):
-                capped = True
-                # Stop drawing only while NO process has produced an
-                # uncapped warm min. r14's l02 leg showed why the old
-                # unconditional break is wrong: proc 1 measured 71.3 s
-                # warm, proc 2's COLD run hit the 240 s cap (a cold
-                # wall — page cache + JIT, not a plan cost), and the
-                # break then suppressed proc 3 entirely, leaving a
-                # "bimodal" artifact built from one warm min and one
-                # cold draw. With an uncapped min in hand, later
-                # capped draws are recorded data (the distribution),
-                # not a reason to abandon the min-of-N protocol.
-                if all(a >= CAP_S for a in attempts):
-                    break
-        if best is None:
-            print(
-                json.dumps(
-                    {
-                        "factor": factor,
-                        "engine": "spark-isolated",
-                        "query": name,
-                        "error": err or "worker died",
-                    }
-                ),
-                flush=True,
-            )
-            continue
-        out[name] = best
-        rec = {
-            "factor": factor,
-            "engine": "spark-isolated",
-            "query": name,
-            "warm_s": best,
-        }
-        if len(attempts) > 1:
-            rec["proc_walls"] = attempts
-        if capped:
-            rec["capped"] = True
-        print(json.dumps(rec), flush=True)
-    return out
-
-
-def _duck_times(corpus: str, factor: int) -> dict[str, float]:
-    import duckdb  # noqa: PLC0415
-
-    from hetnetdb_spark import registry  # noqa: PLC0415
-
-    registry.load_all()
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(corpus, f"{t}.parquet")
-        src = path if os.path.isfile(path) else os.path.join(path, "*.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
-    # Honest runaway cap (r10 verdict item 5): if a single DuckDB
-    # cold run exceeds the cap, the COLD wall is recorded as that
-    # query's number (flagged "capped") instead of burning 3 more
-    # runs — a conservative treatment that can only UNDERSTATE the
-    # DuckDB-side cost, i.e. bias ratios AGAINST the Spark engine.
-    cap_s = float(os.environ.get("SPARK_GRAFT_CROSSOVER_DUCK_CAP_S", "0"))
-    out: dict[str, float] = {}
-    for name in QUERIES:
-        sql = registry.ORACLE[name]
-        try:
-            t0 = time.perf_counter()
-            con.execute(sql).fetchdf()  # cold
-            cold = time.perf_counter() - t0
-            capped = bool(cap_s) and cold > cap_s
-            if capped:
-                best = cold
-            else:
-                best = float("inf")
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    con.execute(sql).fetchdf()
-                    best = min(best, time.perf_counter() - t0)
-        except Exception as exc:  # noqa: BLE001 — r12: DuckDB's own
-            # OOM on the 300x banded-LSH replay must not sink the run
-            print(
-                json.dumps(
-                    {
-                        "factor": factor,
-                        "engine": "duckdb",
-                        "query": name,
-                        "error": str(exc)[:200],
-                    }
-                ),
-                flush=True,
-            )
-            continue
-        out[name] = round(best, 4)
-        rec = {"factor": factor, "engine": "duckdb", "query": name, "warm_s": out[name]}
-        if capped:
-            rec["capped"] = True
-        print(json.dumps(rec), flush=True)
-    con.close()
-    return out
-
-
-def _write_out(summary: dict[str, dict]) -> None:
-    """Merge `summary` into the out-file NOW — called after every
-    factor so a crashed leg (r12: an executor OOM) loses at most the
-    factor in flight, never the measurements already taken."""
-    out = os.environ.get("SPARK_GRAFT_CROSSOVER_OUT", "")
-    if not out:
-        return
-    family = os.environ.get("SPARK_GRAFT_CROSSOVER_FAMILY", "headline")
-    path = out if os.path.isabs(out) else os.path.join(REPO, out)
+def write_doc(path: str, family: str, queries: list[str], factors: dict[str, dict]) -> None:
+    """Merge one family's factor entries into the JSON file at `path`."""
     doc: dict = {}
     if os.path.exists(path):
         with open(path) as fh:
             doc = json.load(fh)
-    doc["protocol"] = (
-        "symmetric: per factor/engine/query one cold run then "
-        "min-of-3 full re-executions (fresh QueryExecution / "
-        "fresh DuckDB execute), same parquet files, all cores; "
-        f"at factors >= {ISO_MIN_FACTOR}x the recorded ratio uses "
-        f"ISOLATED Spark walls ONLY (min over {ISO_PROCS} fresh "
-        "processes per query, cold + min-of-3 each); resident-"
-        "session walls are context data and the cross-regime "
-        "min is reported separately as ratio_resident_min — the "
-        "r12 min(iso, resident) basis was biased low (r13 ADVICE)"
-    )
+    doc["protocol"] = PROTOCOL.format(procs=PROCS, cap=ab_fresh.CAP_S)
     fam = doc.setdefault(family, {})
-    fam["queries"] = QUERIES
-    fam.setdefault("factors", {}).update(summary)
+    fam["queries"] = queries
+    fam.setdefault("factors", {}).update(factors)
     with open(path, "w") as fh:
         json.dump(doc, fh, indent=1, sort_keys=True)
         fh.write("\n")
@@ -366,79 +171,22 @@ def _write_out(summary: dict[str, dict]) -> None:
 
 
 def main() -> int:
+    out = os.environ.get("SPARK_GRAFT_CROSSOVER_OUT", "")
+    family = os.environ.get("SPARK_GRAFT_CROSSOVER_FAMILY", "headline")
     summary: dict[str, dict] = {}
     for factor in FACTORS:
-        corpus = _corpus(factor)
-        duck = _duck_times(corpus, factor)
-        resident = _spark_times(corpus, factor)
-        spark = resident
-        entry: dict = {
-            "duckdb_total_s": round(sum(duck.values()), 4),
-            "per_query_duckdb_s": duck,
-            "per_query_spark_resident_s": resident,
-            "spark_total_resident_s": round(sum(resident.values()), 4),
-        }
-        if factor >= ISO_MIN_FACTOR:
-            # The RECORDED ratio at large factors uses ISOLATED walls
-            # ONLY (per query: min over ISO_PROCS fresh processes).
-            # r12 recorded min(isolated, resident), but that is a
-            # biased-low estimator: it re-admits resident-session
-            # warm state (shared JVM heap/JIT/page cache) exactly and
-            # only when it favors Spark, defeating the reason
-            # isolation was introduced (r13 ADVICE). The resident
-            # walls stay in the artifact as context, and a separate
-            # `ratio_resident_min` records what the cross-regime min
-            # would have said, side by side rather than silently.
-            iso = _spark_isolated_times(corpus, factor)
-            entry["per_query_spark_isolated_s"] = iso
-            spark = iso
-            entry["ratio_basis"] = "isolated-only"
-            both_ctx = [q for q in QUERIES if q in iso and q in duck]
-            cross = {
-                q: min(iso[q], resident[q]) if q in resident else iso[q]
-                for q in both_ctx
-            }
-            d_ctx = sum(duck[q] for q in both_ctx)
-            if d_ctx > 0:
-                entry["ratio_resident_min"] = round(
-                    sum(cross.values()) / d_ctx, 3
-                )
-        else:
-            entry["ratio_basis"] = "resident"
-        # Totals and the set ratio cover only queries BOTH engines
-        # completed — a failed leg is recorded as an error line and
-        # listed here, never silently averaged away.
-        both = [q for q in QUERIES if q in spark and q in duck]
-        failed = [q for q in QUERIES if q not in both]
-        if failed:
-            entry["failed_queries"] = failed
-        s_tot = round(sum(spark[q] for q in both), 4)
-        d_tot = round(sum(duck[q] for q in both), 4)
-        entry["duckdb_total_s"] = d_tot
-        entry.update(
-            {
-                "spark_total_s": s_tot,
-                "ratio": round(s_tot / d_tot, 3) if d_tot > 0 else None,
-                "per_query_ratio": {
-                    q: round(spark[q] / duck[q], 3) if duck[q] > 0 else None
-                    for q in both
-                },
-            }
-        )
-        summary[str(factor)] = entry
-        _write_out({str(factor): entry})
-    print(
-        json.dumps(
-            {"summary": "engine_crossover", "factors": summary}
-        ),
-        flush=True,
-    )
+        corpus = grown.corpus(grown.BASE, factor, LAW)
+        specs = [f"{arm}:{q}" for q in QUERIES for arm in ("registry", "duck")]
+        recs = ab_fresh.draws(specs, PROCS, {"SPARK_GRAFT_SF_DIR": corpus})
+        for spec, rows in recs.items():
+            print(json.dumps({"factor": factor, "spec": spec, "draws": rows}), flush=True)
+        summary[str(factor)] = summarize(recs, QUERIES)
+        if out:
+            write_doc(out if os.path.isabs(out) else os.path.join(REPO, out),
+                      family, QUERIES, {str(factor): summary[str(factor)]})
+    print(json.dumps({"summary": "engine_crossover", "factors": summary}), flush=True)
     return 0
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--worker":
-        raise SystemExit(
-            _worker(sys.argv[2], sys.argv[3], int(sys.argv[4]))
-        )
     raise SystemExit(main())

@@ -10,7 +10,8 @@ or vectors); this prints the measured bytes so the claim is a number,
 not an adjective.
 
 Usage:
-    python tools/pipeline_demo.py [CORPUS]   # default 300x documents
+    python tools/pipeline_demo.py [CORPUS]   # default: sf0.1 grown 300x,
+                                             # salted documents (tools/grown.py)
 Prints one JSON line per stage and a markdown table at the end.
 """
 
@@ -26,6 +27,7 @@ sys.path.insert(0, ROOT)
 
 from hetnetdb_spark import registry  # noqa: E402
 from hetnetdb_spark.session import get_spark  # noqa: E402
+from tools import grown  # noqa: E402
 
 CHAIN = [
     ("l09_quality_filter", "Gopher-style quality gate"),
@@ -91,12 +93,10 @@ def _walk_metrics(node, out: dict) -> None:
 
 
 def main() -> int:
-    corpus = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        ROOT, ".scratch", "scale_smoke_300x_documents_v2"
-    )
     registry.load_all()
     spark = get_spark("pipeline-demo")
     spark.sparkContext.setLogLevel("ERROR")
+    corpus = sys.argv[1] if len(sys.argv) > 1 else grown.corpus(grown.BASE, 300, "documents", spark)
     rows = []
     only = {s for s in os.environ.get("SPARK_GRAFT_DEMO_STAGES", "").split(",") if s}
     for name, desc in CHAIN:

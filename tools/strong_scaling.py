@@ -2,20 +2,23 @@
 
 The sandbox is a single JVM (`local[N]`), so multi-NODE execution
 can't be demonstrated directly; what CAN be measured is whether the
-engine's plans actually parallelize: fixed work (the 10x-replicated
-sf0.1 corpus shared with tools/scale_smoke.py), varying only the
-core count. A plan that partitions correctly — scan splits sized by
+engine's plans actually parallelize: fixed work (the sf0.1 corpus grown
+10x under tools/grown.py's verbatim law), varying only the core
+count. A plan that partitions correctly — scan splits sized by
 ``maxPartitionBytes``, shuffles keyed on the group/join columns, no
 driver-side funnel — speeds up with cores until input splits or
 fixed JVM overhead bound it; a plan with a hidden serial stage
 (driver collect, single-partition sort, an un-parallelized Python
 boundary) stays flat and is exposed here immediately.
 
-Method: for each rung of the ladder (default 4/16/32 cores) build a
-FRESH SparkSession at ``local[cores]`` (SPARK_GRAFT_CPUS is what
-hetnetdb_spark.session.get_spark reads), run each query once cold
-and take min-of-5 warm, then stop the session so the next rung's
-scheduler sees its own core budget.
+Method: for each rung of the ladder (default 4/16/32 cores) and each
+query, tools/ab_fresh.py draws one fresh process with
+``SPARK_GRAFT_CPUS=<rung>`` in its environment (what
+hetnetdb_spark.session.get_spark reads for ``local[cores]``): cold,
+then min-of-3. A rung never shares a JVM with another rung: the py4j
+JVM and its JIT state survive ``spark.stop()``, so later rungs in one
+process would inherit warm-up the first rung paid for and overstate
+speedup.
 
 Byte-based knobs are scaled DOWN to fixture scale, deliberately.
 Production defaults (128 MB ``maxPartitionBytes``, 64 MB AQE
@@ -55,6 +58,7 @@ covered by the slope programs instead).
 Usage:
     python tools/strong_scaling.py                 # 4,16,32 ladder
     SPARK_GRAFT_CORES_LADDER=2,8,32 python tools/strong_scaling.py
+    SPARK_GRAFT_SCALING_CORPUS=<grown corpus dir> python tools/strong_scaling.py
 Prints one JSON line per (cores, query) plus a summary line; exit 1
 if any query fails the speedup gate.
 """
@@ -64,9 +68,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
+
+import ab_fresh  # noqa: E402
+import grown  # noqa: E402
 
 LADDER = [
     int(s)
@@ -78,7 +85,7 @@ LADDER = [
 #: Conservative on purpose: 8x cores at fixture scale buys ~3-5x on
 #: scan-bound plans once fixed per-stage costs are paid; anything
 #: below 1.5x on a query with real work means a serial stage.
-MIN_SPEEDUP = float(os.environ.get("SPARK_GRAFT_MIN_SPEEDUP", "1.5"))
+MIN_SPEEDUP = 1.5
 #: Queries faster than this at the LO rung are fixed-cost-dominated;
 #: they are exempt from MIN_SPEEDUP but still gated on NO_DEGRADE.
 #: Calibration (honest fresh-execution runs, round 10): a fresh
@@ -88,11 +95,11 @@ MIN_SPEEDUP = float(os.environ.get("SPARK_GRAFT_MIN_SPEEDUP", "1.5"))
 #: scheduling overhead, not plan scalability (events_tumbling_1h at
 #: the 30x corpus: 0.60 s at c4 of which ~0.45 s is floor; its
 #: parallelizable work is real but too small to move the ratio).
-GATE_FLOOR_S = float(os.environ.get("SPARK_GRAFT_GATE_FLOOR_S", "0.8"))
-#: Hard floor for every query: walls this short are ~20% noisy
-#: (min-of-5), so a "speedup" down to 0.75x is indistinguishable
-#: from flat; below that is a real degradation and fails the run.
-NO_DEGRADE = float(os.environ.get("SPARK_GRAFT_NO_DEGRADE", "0.75"))
+GATE_FLOOR_S = 0.8
+#: Hard floor for every query: walls this short are ~20% noisy, so a
+#: "speedup" down to 0.75x is indistinguishable from flat; below that
+#: is a real degradation and fails the run.
+NO_DEGRADE = 0.75
 
 #: Byte knobs scaled to fixture size (see module docstring): keep
 #: splits-per-core >> 1 at the largest rung, matching the regime a
@@ -103,8 +110,6 @@ _LADDER_CONF = {
 }
 
 QUERIES = [
-    s for s in os.environ.get("SPARK_GRAFT_SCALING_QUERIES", "").split(",") if s
-] or [
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_local_supplier",
@@ -114,81 +119,63 @@ QUERIES = [
 ]
 
 
-def _corpus() -> str:
-    """Build (or reuse) scale_smoke's cached 10x corpus.
+def __getattr__(name: str):
+    """``strong_scaling:<query>`` ab_fresh specs: the registered query
+    at $SPARK_GRAFT_SF_DIR on a session carrying the ladder's byte
+    confs."""
+    if name not in QUERIES:
+        raise AttributeError(name)
 
-    SPARK_GRAFT_SCALING_CORPUS overrides with an existing corpus dir
-    (r16: the 300x replica, where 8→32-core ratios carry signal —
-    at sf0.1 every headliner sits at ≤2x the per-execution floor and
-    core count cannot show; see PERF_r15 scaling block)."""
+    def build(spark):
+        from hetnetdb_spark import registry  # noqa: PLC0415
+
+        for k, v in _LADDER_CONF.items():
+            spark.conf.set(k, v)
+        return registry.QUERIES[name](spark, os.environ["SPARK_GRAFT_SF_DIR"])
+
+    return build
+
+
+def _corpus() -> str:
+    """The 10x verbatim corpus, or SPARK_GRAFT_SCALING_CORPUS, an
+    existing corpus dir (r16: the 300x replica, where 8→32-core
+    ratios carry signal — at sf0.1 every headliner sits at ≤2x the
+    per-execution floor and core count cannot show; see PERF_r15
+    scaling block)."""
     override = os.environ.get("SPARK_GRAFT_SCALING_CORPUS")
     if override:
         if not os.path.isdir(override):
             raise SystemExit(f"scaling corpus {override} missing")
         return override
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    import scale_smoke  # noqa: PLC0415
-
-    from hetnetdb_spark.session import get_spark  # noqa: PLC0415
-
-    if not all(
-        os.path.exists(os.path.join(scale_smoke.OUT, f"{t}.parquet"))
-        for t in scale_smoke.TABLE_NAMES
-    ):
-        spark = get_spark("strong-scaling-build")
-        spark.sparkContext.setLogLevel("ERROR")
-        scale_smoke.replicate(spark)
-        spark.stop()
-    return scale_smoke.OUT
-
-
-def _run_rung(cores: int, corpus: str) -> dict[str, float]:
-    os.environ["SPARK_GRAFT_CPUS"] = str(cores)
-    from hetnetdb_spark import registry  # noqa: PLC0415
-    from hetnetdb_spark.session import get_spark  # noqa: PLC0415
-
-    registry.load_all()
-    spark = get_spark(f"strong-scaling-{cores}")
-    spark.sparkContext.setLogLevel("ERROR")
-    for k, v in _LADDER_CONF.items():
-        spark.conf.set(k, v)
-    timings: dict[str, float] = {}
-    try:
-        for name in QUERIES:
-            fn = registry.QUERIES[name]
-            fn(spark, corpus).toPandas()  # cold: plan + codegen + IO cache
-            warm = []
-            for _ in range(5):
-                t0 = time.perf_counter()
-                fn(spark, corpus).toPandas()
-                warm.append(time.perf_counter() - t0)
-            timings[name] = round(min(warm), 4)
-            print(
-                json.dumps({"cores": cores, "query": name, "warm_s": timings[name]}),
-                flush=True,
-            )
-    finally:
-        spark.stop()
-    return timings
+    return grown.corpus(grown.BASE, 10, "verbatim")
 
 
 def main() -> int:
     corpus = _corpus()
-    by_rung: dict[int, dict[str, float]] = {}
+    by_rung: dict[int, dict[str, float | None]] = {}
     for cores in LADDER:
-        by_rung[cores] = _run_rung(cores, corpus)
+        env = {"SPARK_GRAFT_CPUS": str(cores), "SPARK_GRAFT_SF_DIR": corpus}
+        recs = ab_fresh.draws([f"strong_scaling:{q}" for q in QUERIES], 1, env)
+        by_rung[cores] = {q: ab_fresh.best(recs[f"strong_scaling:{q}"]) for q in QUERIES}
+        for q in QUERIES:
+            print(json.dumps({"cores": cores, "query": q, "warm_s": by_rung[cores][q]}), flush=True)
     lo, hi = min(LADDER), max(LADDER)
     ratio = hi / lo
     failures = []
     summary = {}
     for name in QUERIES:
+        walls = {f"c{c}": by_rung[c][name] for c in LADDER}
+        if None in walls.values():
+            failures.append(name)
+            summary[name] = {"gate": "failed_draw", **walls}
+            continue
         speed = round(by_rung[lo][name] / by_rung[hi][name], 2)
         gated = by_rung[lo][name] >= GATE_FLOOR_S
         summary[name] = {
             "speedup": speed,
             "efficiency": round(speed / ratio, 2),
             "gate": "speedup" if gated else "overhead_bound",
-            **{f"c{c}": by_rung[c][name] for c in LADDER},
+            **walls,
         }
         if (gated and speed < MIN_SPEEDUP) or speed < NO_DEGRADE:
             failures.append(name)
