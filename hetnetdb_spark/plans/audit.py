@@ -10,19 +10,9 @@ costing a factor at scale.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 from pyspark.sql import DataFrame
-
-
-def explain_string(df: DataFrame, mode: str = "formatted") -> str:
-    """The plan text `df.explain(mode)` prints, captured."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
 
 
 def executed_plan(df: DataFrame) -> str:
@@ -54,10 +44,6 @@ def shuffle_exchange_count(plan: str) -> int:
             r"(?<![A-Za-z])Exchange (?:hash|range|single|round)", plan, re.IGNORECASE
         )
     )
-
-
-def broadcast_exchange_count(plan: str) -> int:
-    return plan.count("BroadcastExchange")
 
 
 def has_pushed_filter(plan: str, fragment: str) -> bool:

@@ -12,11 +12,22 @@ schema + order-insensitive value hash), so:
   (summation-order last-ulp drift would otherwise break hashes);
 - every ORDER BY used for top-k/limit carries a unique tiebreaker so
   the selected row set is deterministic across engines.
+
+``load_all`` only imports the operator modules, so ``QUERIES`` and
+``ORACLE`` iterate in registration order. The driver checks a bounded
+prefix of ``__spark_entry__.queries()``; those entry points alone
+reorder through ``verification_order()``, which reads the driver's
+CORRECTNESS files and ``CERTIFIED.json`` and fingerprints the code
+(about 1 s for the whole registry). No name list is kept by hand:
+a query re-enters the window when its code or oracle changed since
+the driver last certified it.
 """
 
 from __future__ import annotations
 
 import functools
+import json
+import pathlib
 from collections.abc import Callable
 from typing import TYPE_CHECKING
 
@@ -29,8 +40,8 @@ QUERIES: dict[str, SparkQuery] = {}
 ORACLE: dict[str, str] = {}
 
 #: Names registered with ``impure=True`` — their construction runs
-#: side effects (scratch-dir writes, streaming runs), so they sort
-#: behind pure batch queries within each verification tier.
+#: side effects (scratch-dir writes, streaming runs), so unverified
+#: ones sort behind unverified pure batch queries.
 IMPURE: set[str] = set()
 
 #: Prepared-plan cache for PURE queries, keyed by (applicationId,
@@ -98,39 +109,36 @@ def query(
     return deco
 
 
-def _certification_rounds() -> dict[str, int]:
-    """Per-query driver-certification state from CORRECTNESS files.
+#: The function ``query`` received for each name, recorded by
+#: ``load_all`` before any caller can replace a ``QUERIES`` entry
+#: (perfbench's serve host wraps them): ``query`` hands out either
+#: that function or a ``functools.wraps`` plan-cache wrapper over it.
+RECEIVED: dict[str, SparkQuery] = {}
 
-    Returns ``{name: round}`` where ``round`` is the round number of
-    the LATEST driver CORRECTNESS file that mentions the name — but
-    only for names whose latest mention is GREEN. A name whose latest
-    row is red (or that no file mentions) is absent from the dict.
+_ROOT = pathlib.Path(__file__).resolve().parent.parent
+#: Fingerprints of the code the driver last certified, written by
+#: ``tools/certify.py`` after each driver round.
+CERTIFIED = _ROOT / "CERTIFIED.json"
 
-    The driver records per-round ``CORRECTNESS_r{N}.json`` at the repo
-    root but verifies only a bounded prefix of the registry (round 2
-    stopped at exactly 50 entries). ``_prioritize`` uses this to put
-    never-verified and last-failed queries at the front of the
-    registry, and — once everything is green — to refresh the STALEST
-    certifications first, so the bounded window rotates through the
-    registry instead of re-checking last round's freshest rows.
 
-    "Green" means rows+schema+hash all matched, or — for queries that
-    declare no oracle (rows-only contract) — that the driver ran the
-    query and recorded a row count. Later rounds override earlier
-    ones: a query that regressed is re-queued for verification.
+def correctness_files() -> dict[int, pathlib.Path]:
+    """The driver's ``CORRECTNESS_r{N}.json`` files by round N."""
+    files = _ROOT.glob("CORRECTNESS_r*.json")
+    return dict(sorted((int(p.stem.rpartition("_r")[2]), p) for p in files))
+
+
+def certification_rounds() -> dict[str, int]:
+    """``{name: round}`` for every name whose latest driver row is green.
+
+    The driver records one ``CORRECTNESS_r{N}.json`` per round at the
+    repo root; ``round`` is the newest file that mentions the name. A
+    name whose latest row is red, or that no file mentions, is absent.
+    "Green" means rows, schema and hash all matched, or, for a query
+    without an oracle (rows-only contract), that the driver ran it and
+    recorded a row count. Later rounds override earlier ones.
     """
-    import json
-    import pathlib
-    import re
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    files = sorted(
-        root.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.stem).group(1)),
-    )
     rounds: dict[str, int] = {}
-    for path in files:
-        rnd = int(re.search(r"r(\d+)", path.stem).group(1))
+    for rnd, path in correctness_files().items():
         try:
             rows = json.loads(path.read_text())
         except (OSError, ValueError):
@@ -156,196 +164,59 @@ def _certification_rounds() -> dict[str, int]:
     return rounds
 
 
-def _verified_names() -> set[str]:
-    """Names whose latest driver CORRECTNESS mention is green."""
-    return set(_certification_rounds())
+@functools.cache
+def unverified() -> tuple[str, ...]:
+    """Names the driver must check again, in registration order.
 
-
-#: Queries added in the CURRENT round, i.e. after the newest recorded
-#: CORRECTNESS file. They yield window priority to queries that have
-#: already waited a full round unverified (the round-2 driver stopped
-#: at 50 entries; round 2's L/T/S/U tail must not be displaced
-#: again). Once the next CORRECTNESS file lands, survivors of this
-#: list sort first automatically and the list should be rotated.
-#: (Round 5: rotated — round 4's 14 additions have now waited a full
-#: round and sort into tiers 0/1 via CORRECTNESS_r04.json.)
-NEW_THIS_ROUND: frozenset[str] = frozenset(
-    {
-        # Round 14: rotated — CORRECTNESS_r13 certified the round-13
-        # additions (s45_parquet_robustness, l78_hybrid_retrieval_rrf
-        # both driver-green), so they sort into the verified tier by
-        # staleness. Round-14 newcomers land here.
-        # Round 15: rotated — CORRECTNESS_r14 certified l79/l80/t28
-        # (driver-green; s46's red row re-entered via RECHECK).
-        # Round 16: rotated — CORRECTNESS_r15 certified the round-15
-        # newcomers (s47_merge_snapshot_diff, t29_stream_cdc_merge,
-        # l81_index_maintenance, all driver-green), so they sort into
-        # the verified tier by staleness. No round-16 newcomers: this
-        # is an optimization round, no new features.
-    }
-)
-
-#: Queries whose ORACLE or semantics changed this round while already
-#: holding a green/rows-only CORRECTNESS row. The green row certifies
-#: the OLD contract, so they must re-enter the verification window as
-#: if unverified (a19's round-4 hash fail plus every query touched by
-#: the round-5 float-discipline fixes).
-RECHECK_THIS_ROUND: frozenset[str] = frozenset(
-    {
-        # Round 8: rotated to empty. CORRECTNESS_r07 certified both
-        # previously-listed names (l08_frame_sample's new full oracle
-        # and emb_topk_cosine's rebuilt literal-inlined plan, both
-        # driver-green), so nothing needs a forced re-check and every
-        # driver slot goes to the 29-name never-sampled backlog.
-        #
-        # Round 12: rotated to empty. CORRECTNESS_r11 re-certified
-        # every previously-listed rewrite (q1, sessionize, tumbling,
-        # a04, l70, l02_minhash, l04_lsh — all driver-green), so the
-        # whole bounded window goes to the staleness tail: the r12
-        # verdict names the 28 queries whose latest cert is r05
-        # (f18/f19, s03/s16/s20, the l10–l31 dataset-mechanics
-        # family, l02_simhash_neardup, l03_knn_ivf, l04_simjoin_exact,
-        # l08_image_features) — tier 3's stalest-first ordering puts
-        # exactly those at the front without naming them here.
-        #
-        # Round 14: rotated — CORRECTNESS_r13 re-certified all six
-        # round-13 rewrites (l01 packed-long keeper, l14 packed fold,
-        # l77 bigram guard, l20 bm25_scores extraction, l02/l59
-        # no-broadcast hashed verification — all driver-green), so the
-        # bounded window goes to the staleness tail: the r13 verdict
-        # names the 37 queries whose latest cert is r07
-        # (emb_topk_cosine, a27, f27, l08_frame_sample, l33, l37, l39,
-        # l41-l49, l51-l57, l60/l61/l64/l65, s11/s12/s13/s19/s21/s23,
-        # u10/u11/u17, w20) — tier 3's stalest-first ordering puts
-        # exactly those at the front without naming them here. Any
-        # round-14 rewrite that changes a certified query's Spark side
-        # or oracle re-enters here.
-        #
-        # Round 15: rotated — CORRECTNESS_r14 re-certified the r14
-        # hv-ordering rewires (l02_minhash_neardup and
-        # l59_minhash_index_probe, both driver-green).
-        #
-        # Round 16: rotated — CORRECTNESS_r15 re-certified the r15
-        # entries (s46_merge_into and l80_ivf_index_probe, both
-        # driver-green, hash_match true).
-        #
-        # r16 entries, per the r15 verdict's "close the certification
-        # gap": the five r15 optimizer rewrites changed each query's
-        # Spark expression tree (oracles unchanged, 334/334 local
-        # sweeps green at sf0.001 and sf0.01) but none landed in the
-        # r15 driver sample, so the driver has never certified the
-        # rewritten plans. Re-enter them per the standing convention
-        # that any rewrite of a certified query's Spark side re-enters
-        # here:
-        "q1_pricing_summary",          # r15 §2: _sorted_small (no rangepartitioning)
-        "q1_pricing_summary_decimal",  # r15 §2: same helper
-        "q5_local_supplier",           # r15 §2: same helper
-        "window_top3_orders_per_cust", # r15 §1: LIMIT pushed through window
-        "s17_table_profile",           # r15 §4: per-column union, no Expand
-        # r16 banding-spelling rewrite (banded_keys: one nested
-        # planes literal + one transform lambda instead of 64
-        # per-plane HOF dots — Catalyst analysis was the wall, guide
-        # §7.3; fresh-process l04 7.6->1.4 s, tuned 7.2->2.5 s).
-        # Same dot fold, frame-identical banding (pinned by
-        # test_banded_keys_matches_band_structs), oracles unchanged —
-        # re-certify the rewritten Spark side:
-        "l04_simjoin_lsh",
-        "l04_simjoin_lsh_tuned",
-        "l16_components_lsh",
-        # r16 l58 rewrite: per-round COALESCE carry join removed
-        # (dead code on the symmetric edge set — every node receives
-        # votes; fresh-process 2.67->1.43 s, frame-identical at 3
-        # SFs, oracle unchanged) — re-certify the rewritten side:
-        "l58_label_propagation",
-        # r16 f25 rewrite: global sort moved below the xml/xpath
-        # projections (the range-sampling pass re-executed them;
-        # 1.95->1.21 s, frames identical, oracle unchanged):
-        "f25_xml_roundtrip",
-        # r16 l68 rewrite: repeated-gram filter as a window count
-        # over g instead of groupBy(g) + SMJ back onto a second gram
-        # computation — the double shuffle's spill exhausted >68 GB
-        # at the 300× slope corpus (query could not finish; window
-        # spelling peaks ~22 GB, 99 s). Oracle unchanged, green at
-        # sf0.001/0.01/0.1 — re-certify the rewritten side:
-        "l68_dup_span_removal",
-        # r16 j14 rewrite: per-day overlapping-pair count as the
-        # sweep-line window over 2N endpoint rows instead of the
-        # day-blocked self-join (whose residual evaluated
-        # (users/day)^2 pairs per block). Frame-identical at 3 SFs,
-        # oracle unchanged, fresh-process 1.83->0.68 s — re-certify
-        # the rewritten side:
-        "j14_interval_overlap_join",
-        # Both q1 and j14 were rewritten again after r16, oracles
-        # unchanged: q1's _micros rounds without BigDecimal, and j14
-        # drops days with no overlapping pair. They stay listed.
-        #
-        # u07 sums exact integer micros on both sides (its oracle
-        # changed too); its 6dp-rounded double sum missed by one ulp
-        # on generated data:
-        "u07_arrow_python_udf",
-    }
-)
-
-#: Names forced to the very front of the verification window while
-#: they lack a driver-green CORRECTNESS row. Round 9: rotated to
-#: empty — CORRECTNESS_r08 certified all eight round-8 names and the
-#: cumulative ledger reached 301/301 green / 0 never-sampled, so
-#: there is no backlog left to pin. With everything green, the
-#: staleness ordering below (verified queries sort oldest-certified
-#: first) is what fills the driver's bounded window: round 9's
-#: 50-slot window re-certifies the r2-era P/J/W/F rows untouched for
-#: six rounds.
-FRONT_OF_LINE: tuple[str, ...] = ()
-
-
-def _prioritize() -> None:
-    """Reorder QUERIES/ORACLE so unverified queries register first.
-
-    Python dicts iterate in insertion order, and the driver walks the
-    registry in that order — rebuilding the dicts is how we control
-    which queries land in a bounded verification window. Tiers:
-
-    1. unverified since a prior round, pure (cheapest to check)
-    2. unverified since a prior round, impure (scratch/streaming)
-    3. added this round (locally verified only; waited zero rounds)
-    4. verified — STALEST certification first (the round of each
-       name's latest green row, ascending), so once the registry is
-       fully green the bounded window becomes a rolling re-audit of
-       the oldest evidence instead of re-checking last round's
-       freshest rows. Registration order breaks ties.
-
-    Pure-before-impure keeps the unverified backlog cheap in case the
-    driver's cutoff is time-based rather than count-based (within the
-    verified tier staleness outranks purity: an impure query whose
-    green row is six rounds old needs refreshing more than a pure one
-    certified yesterday). Registration order is preserved within each
-    tier, so the ordering is deterministic for a given set of
-    CORRECTNESS files.
+    A name counts as verified when its latest CORRECTNESS row is green
+    and the fingerprint of its current code (``fingerprint.py``)
+    equals the one ``CERTIFIED.json`` recorded when the driver last
+    certified it. A stale manifest only makes this more cautious: more
+    names compare unequal and get re-checked.
     """
-    cert_rounds = _certification_rounds()
-    verified = set(cert_rounds) - RECHECK_THIS_ROUND
+    from hetnetdb_spark.fingerprint import fingerprint  # noqa: PLC0415
+
+    load_all()
+    rounds = certification_rounds()
+    certified = json.loads(CERTIFIED.read_text())["fingerprints"] if CERTIFIED.exists() else {}
+    return tuple(
+        name
+        for name, fn in RECEIVED.items()
+        if name not in rounds or certified.get(name) != fingerprint(fn, ORACLE.get(name))
+    )
+
+
+@functools.cache
+def verification_order() -> tuple[str, ...]:
+    """Every name, in the order the driver should check them.
+
+    The driver checks a bounded prefix of ``__spark_entry__.queries()``
+    (the first ~50 entries), so the order decides what gets certified:
+
+    1. unverified pure queries (cheapest to check);
+    2. unverified impure ones (scratch writes, streaming runs);
+    3. verified ones, STALEST certification first (the round of each
+       name's latest green row, ascending), so the window becomes a
+       rolling re-audit of the oldest evidence.
+
+    Registration order breaks ties. Within the verified tier staleness
+    outranks purity: an impure query certified six rounds ago needs
+    refreshing more than a pure one certified last round.
+    """
+    stale = set(unverified())
+    rounds = certification_rounds()
 
     def tier(name: str) -> tuple[int, int]:
-        if name in FRONT_OF_LINE and name not in verified:
-            # Tier -1 honors the FRONT_OF_LINE tuple's own order (it
-            # is a priority list, not a set) — the stable sort keeps
-            # registration order for every other tier.
-            return (-1, FRONT_OF_LINE.index(name))
-        if name in verified:
-            return (3, cert_rounds[name])
-        if name in NEW_THIS_ROUND:
-            return (2, 0)
-        return (name in IMPURE, 0)
+        return (name in IMPURE, 0) if name in stale else (2, rounds[name])
 
-    ordered = sorted(QUERIES, key=tier)  # stable: keeps registration order
-    for d in (QUERIES, ORACLE):
-        snapshot = {n: d[n] for n in ordered if n in d}
-        d.clear()
-        d.update(snapshot)
+    return tuple(sorted(QUERIES, key=tier))
 
 
 def load_all() -> None:
-    """Import every query module so registration side effects run."""
+    """Import every query module so registration side effects run,
+    and record the function each name received. Nothing is read or
+    reordered: ``QUERIES`` iterates in registration order (the driver
+    entry points order through ``verification_order()``)."""
     # Imported lazily so `import hetnetdb_spark` stays cheap and so a
     # syntax error in one operator family doesn't take down the rest
     # during development (tests import load_all and fail loudly).
@@ -376,4 +247,5 @@ def load_all() -> None:
     from hetnetdb_spark.streaming import queries  # noqa: F401
     from hetnetdb_spark.udfs import surface  # noqa: F401
 
-    _prioritize()
+    for name, fn in QUERIES.items():
+        RECEIVED.setdefault(name, getattr(fn, "__wrapped__", fn))

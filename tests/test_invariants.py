@@ -71,69 +71,37 @@ def test_scale_invariant_query_shapes(spark):
 
 
 def test_verify_first_window_covers_unverified():
-    """The driver checks a bounded prefix of the registry in
-    registration order; every query without a green row in the
-    recorded CORRECTNESS_r*.json files must sort ahead of every
-    already-verified one, so the driver's bounded window always
-    verifies new or regressed work first."""
-    names = list(registry.QUERIES)
-    # RECHECK_THIS_ROUND names hold a green row for an OLD contract;
-    # _prioritize treats them as unverified so the driver re-checks
-    # the new one — mirror that here.
-    verified = registry._verified_names() - registry.RECHECK_THIS_ROUND
-    tiers = [n in verified for n in names]
+    """The driver checks a bounded prefix of ``__spark_entry__``'s
+    queries in order; every query without a green certification of
+    its current code must sort ahead of every verified one, so the
+    bounded window always checks new or changed work first."""
+    import __spark_entry__ as e
+
+    names = list(registry.verification_order())
+    assert sorted(names) == sorted(registry.QUERIES)
+    unverified = set(registry.unverified())
+    tiers = [n not in unverified for n in names]
     assert tiers == sorted(tiers), (
-        "an unverified query is registered after a verified one: "
+        "an unverified query is ordered after a verified one: "
         f"{[n for i, n in enumerate(names) if tiers[i] and not all(tiers[i:])]}"
     )
-    # Pin the known round-2 outcomes — but only while round 2 is the
-    # newest recorded file (a later driver pass legitimately turns
-    # the re-queued oracles green).
-    import glob
-
-    recorded = sorted(
-        glob.glob(os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r*.json"))
-    )
-    if recorded and recorded[-1].endswith("r02.json"):
-        assert {
-            "p07_null_handling",
-            "p09_cast",
-            "f04_math",
-            "f06_from_json_struct",
-        }.isdisjoint(verified)
-        assert {"q1_pricing_summary", "a05_having", "j09_asof_join"} <= verified
-    # Queries that already waited a full round unverified outrank
-    # this round's additions — nothing new may displace the round-2
-    # backlog (T/L/S/U tail) from the driver's bounded window.
-    n_unverified = len(names) - len(verified)
-    unverified = names[:n_unverified]
-    old_idx = [i for i, n in enumerate(unverified) if n not in registry.NEW_THIS_ROUND]
-    new_idx = [i for i, n in enumerate(unverified) if n in registry.NEW_THIS_ROUND]
-    assert not new_idx or not old_idx or max(old_idx) < min(new_idx)
-    # FRONT_OF_LINE names pin to the very front of the backlog while
-    # unverified (tier -1) regardless of purity.
-    front = [n for n in registry.FRONT_OF_LINE if n not in verified]
-    assert unverified[: len(front)] == front
-    # Within the rest of the backlog, pure queries come before impure
+    # Within the unverified head, pure queries come before impure
     # (side-effecting) ones, keeping the window cheap.
-    backlog = [
-        n
-        for n in unverified
-        if n not in registry.NEW_THIS_ROUND and n not in registry.FRONT_OF_LINE
-    ]
-    impure_flags = [n in registry.IMPURE for n in backlog]
+    head = names[: len(unverified)]
+    impure_flags = [n in registry.IMPURE for n in head]
     assert impure_flags == sorted(impure_flags)
     # The verified tail sorts STALEST-certification-first (round of
     # each name's latest green row, ascending) so the driver's
-    # bounded window becomes a rolling re-audit once everything is
-    # green, instead of re-checking last round's freshest rows.
-    cert_rounds = registry._certification_rounds()
-    tail_rounds = [cert_rounds[n] for n in names[n_unverified:] if n in cert_rounds]
+    # bounded window is a rolling re-audit once everything is green.
+    cert_rounds = registry.certification_rounds()
+    tail_rounds = [cert_rounds[n] for n in names[len(unverified) :]]
     assert tail_rounds == sorted(tail_rounds), (
         "verified queries are not ordered oldest-certification-first"
     )
-    # oracle dict preserves the same relative order
-    assert list(registry.ORACLE) == [n for n in names if n in registry.ORACLE]
+    # The driver entry points hand out that order, and the oracle
+    # dict keeps the same relative order.
+    assert list(e.queries()) == names
+    assert list(e.oracle_sql()) == [n for n in names if n in registry.ORACLE]
 
 
 @needs_both

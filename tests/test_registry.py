@@ -45,27 +45,51 @@ def test_every_oracle_has_a_query():
     assert not orphans, f"oracles without a queries() entry: {sorted(orphans)}"
 
 
-def test_front_of_line_names_exist():
+def test_certified_manifest_is_sane():
+    """CERTIFIED.json (written by tools/certify.py) names only
+    registered queries and records a round the driver has recorded."""
+    import json
+
     registry.load_all()
-    missing = [n for n in registry.FRONT_OF_LINE if n not in registry.QUERIES]
-    assert not missing, f"FRONT_OF_LINE references unknown queries: {missing}"
+    with open(registry.CERTIFIED) as fh:
+        doc = json.load(fh)
+    unknown = set(doc["fingerprints"]) - set(registry.QUERIES)
+    assert not unknown, f"CERTIFIED.json names unknown queries: {sorted(unknown)}"
+    recorded = [
+        int(m.group(1))
+        for f in os.listdir(REPO)
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f))
+    ]
+    assert doc["round"] <= max(recorded)
+    assert re.fullmatch(r"[0-9a-f]{40}", doc["commit"])
 
 
-def test_rotation_lists_name_real_queries():
-    """A typo in NEW_THIS_ROUND / RECHECK_THIS_ROUND / FRONT_OF_LINE
-    would silently break the driver-window prioritization — every
-    name must be a registered query."""
+def test_changed_fingerprint_reenters_the_window(tmp_path, monkeypatch):
+    """A certified name whose recorded fingerprint no longer matches
+    its code counts as unverified; nothing else changes."""
+    import json
+
     registry.load_all()
-    names = set(registry.QUERIES)
-    assert registry.NEW_THIS_ROUND <= names, (
-        registry.NEW_THIS_ROUND - names
-    )
-    assert registry.RECHECK_THIS_ROUND <= names, (
-        registry.RECHECK_THIS_ROUND - names
-    )
-    assert set(registry.FRONT_OF_LINE) <= names, (
-        set(registry.FRONT_OF_LINE) - names
-    )
+    doc = json.loads(registry.CERTIFIED.read_text())
+    current = set(registry.unverified())
+    name = next(n for n in doc["fingerprints"] if n not in current)
+    doc["fingerprints"][name] = "0" * 40
+    manifest = tmp_path / "CERTIFIED.json"
+    manifest.write_text(json.dumps(doc))
+    monkeypatch.setattr(registry, "CERTIFIED", manifest)
+    assert set(registry.unverified.__wrapped__()) == current | {name}
+
+
+def test_unverified_pure_queries_lead_the_window(monkeypatch):
+    """Unverified pure queries sort before unverified impure ones,
+    whatever their registration order (the live re-check set may hold
+    no impure query at all)."""
+    registry.load_all()
+    names = list(registry.QUERIES)
+    impure = next(n for n in names if n in registry.IMPURE)
+    pure = next(n for n in reversed(names) if n not in registry.IMPURE)
+    monkeypatch.setattr(registry, "unverified", lambda: (impure, pure))
+    assert registry.verification_order.__wrapped__()[:2] == (pure, impure)
 
 
 def test_plan_lint_allowlist_names_are_registered():

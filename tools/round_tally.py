@@ -1,29 +1,27 @@
 """Generated end-of-round tally — one authoritative closing block.
 
-Round 11's hand-written closing numbers drifted (PLANS said 321
-queries / 500 tests while HEAD held 322 / 502: t27 landed after the
-block was written). This tool derives every number from the live
-registry and the newest committed artifacts, labels each with its
-source and mtime, and prints a markdown block to paste VERBATIM into
-PLANS.md — so the tally can never disagree with what a judge
-re-derives, only be older (and it says how old).
+Hand-written closing numbers drift. This tool derives every number
+from the live registry and the newest committed artifacts, labels
+each with its source and mtime, and prints a markdown block to paste
+VERBATIM into PLANS.md: it can only be older than what a judge
+re-derives (and it says how old), never disagree.
 
 Usage:
     python tools/round_tally.py            # artifact-only (no pytest)
     python tools/round_tally.py --pytest   # also runs the full test
-                                           # suite (~10 min) and
-                                           # includes its summary
+                                           # suite (~10 min)
 
 Numbers and their sources:
   registry / oracle / impure counts  — live import of the registry
+  verification window                — CERTIFIED.json, CORRECTNESS_r*.json
   COVERAGE.md header                 — parsed, cross-checked live
   sweep result                       — newest DRIVER_EQUIV_r*.txt
   suite total                        — newest SUITE_r*.json
   bench headline                     — newest BENCH_r*.json
   scale gate                         — scale_gate.evaluate() over the
                                        newest SCALE_STORY*.json
-  pytest                             — only with --pytest (never
-                                       inferred from a stale artifact)
+  pytest                             — only with --pytest, never
+                                       from a stale artifact
 """
 
 from __future__ import annotations
@@ -64,6 +62,9 @@ def main() -> int:
         f"- registry (live import): **{n_q} queries**, {n_oracle} with "
         f"DuckDB oracles, {n_impure} impure/rows-only"
     )
+    certified = json.loads(registry.CERTIFIED.read_text())["round"]
+    lines.append(f"- verification window: CERTIFIED.json round {certified}, newest CORRECTNESS "
+                 f"round {max(registry.correctness_files())}, re-check {list(registry.unverified())}")
 
     cov = os.path.join(ROOT, "COVERAGE.md")
     with open(cov) as fh:

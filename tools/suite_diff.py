@@ -8,8 +8,8 @@ slower than THRESHOLD× its baseline. Exit 1 on any unexplained flag,
 so the round checklist catches non-headline regressions the moment
 they land instead of by judge spot-check.
 
-Queries NEW since the baseline (no baseline entry) are reported
-informationally and do not flag. With ``--update-baseline`` an entry
+Queries NEW since the baseline only inform; a baseline query MISSING
+from the run exits 1. With ``--update-baseline`` an entry
 may only be LOWERED (and a new query may only ENTER) at its
 load-robust floor: every candidate improvement is re-measured with 2
 warm-ups + min-of-5 interleaved passes and the ROBUST min is written,
@@ -266,10 +266,13 @@ def main() -> int:
         print(f"new   {name:40s} enters at {suite[name]:.3f}s")
     for name in failed:
         print(f"FAIL  {name:40s} errored during the bench run")
+    missing = sorted(set(base) - set(suite))
+    for name in missing:
+        print(f"MISSING {name:38s} in baseline but not in this run")
     print(
         f"\n{len(suite)} suite queries vs {os.path.basename(BASELINE)}: "
         f"{len(flagged)} flagged (> {THRESHOLD}x and > {MIN_DELTA_S * 1000:.0f} ms), "
-        f"{len(new)} new, {len(failed)} failed"
+        f"{len(new)} new, {len(failed)} failed, {len(missing)} missing"
     )
 
     rr_flagged: list[tuple[str, float, float]] = []
@@ -349,16 +352,16 @@ def main() -> int:
             f.write("\n")
         print(f"baseline updated: robust floors over {len(merged)} queries")
     # Exit contract (header): without --recheck, RR-only entries are
-    # judge-view selection signals, not verdicts — only robust-floor
-    # flags and failures exit 1. After --recheck, `flagged` holds the
-    # robust survivors, which exit 1 regardless of origin.
+    # judge-view selection signals, not verdicts. After --recheck,
+    # `flagged` holds the robust survivors, which exit 1 whatever
+    # their origin; failures and missing queries always exit 1.
     gating = flagged if recheck else [f for f in flagged if f[0] not in rr_only]
     if not recheck and len(gating) != len(flagged):
         print(
             f"exit: {len(flagged) - len(gating)} RR-only flag(s) excluded "
             "from the exit code (re-run with --recheck to adjudicate them)"
         )
-    return 1 if gating or failed else 0
+    return 1 if gating or failed or missing else 0
 
 
 if __name__ == "__main__":
