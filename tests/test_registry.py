@@ -12,6 +12,7 @@ import os
 import re
 
 from hetnetdb_spark import registry
+from hetnetdb_spark.plans import audit
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -92,56 +93,36 @@ def test_unverified_pure_queries_lead_the_window(monkeypatch):
     assert registry.verification_order.__wrapped__()[:2] == (pure, impure)
 
 
-def test_plan_lint_allowlist_names_are_registered():
-    """tools/plan_lint.py adjudicates Generate-fed broadcasts per
-    query name; a renamed or deleted query must not leave a stale
-    allowlist entry silently skipping the lint."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "plan_lint", os.path.join(REPO, "tools", "plan_lint.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+def test_plan_ledger_names_are_registered():
+    """PLAN_LEDGER.json has one row per pure query and nothing else,
+    and every adjudication names an existing rule and a live query or
+    collect site: a renamed or deleted query must not leave a stale
+    entry behind."""
     registry.load_all()
-    for allowlist_name in (
-        "ALLOWLIST",
-        "CARTESIAN_ALLOWLIST",
-        "DRIVER_ROWS_ALLOWLIST",
-        "BATCH_EVAL_ALLOWLIST",
-        "BROADCAST_FACT_ALLOWLIST",
-    ):
-        stale = set(getattr(mod, allowlist_name)) - set(registry.QUERIES)
-        assert not stale, (
-            f"{allowlist_name} names not in the registry: {sorted(stale)}"
-        )
-
-
-def _load_plan_lint():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "plan_lint", os.path.join(REPO, "tools", "plan_lint.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    ledger = audit.load_ledger()
+    pure = {n for n in registry.QUERIES if n not in registry.IMPURE}
+    assert set(ledger["queries"]) == pure
+    _, sites = audit.lint_collect_sites(os.path.join(REPO, "hetnetdb_spark"))
+    live_sites = {key for key, *_ in sites}
+    for key, rules in ledger["adjudications"].items():
+        assert key in pure | live_sites, f"adjudication for no live query or site: {key}"
+        assert set(rules) <= set(audit.RULES), f"{key}: unknown rule in {sorted(rules)}"
+        assert (set(rules) == {"collect"}) == (key in live_sites), f"{key}: {sorted(rules)}"
 
 
 def test_collect_lint_package_is_clean():
-    """plan_lint rule 5 (r13): every .collect() in the package is
-    either bounded by its fluent chain (agg/limit/...) or
-    individually adjudicated in COLLECT_ALLOWLIST."""
-    mod = _load_plan_lint()
-    bounded, allowed, flagged = mod.lint_collect_sites(
-        os.path.join(REPO, "hetnetdb_spark")
-    )
-    assert not flagged, f"unadjudicated .collect() sites: {flagged}"
-    # every allowlist entry must correspond to a live site — a stale
-    # entry means the adjudication no longer guards anything
-    live_keys = {k for k, _, _ in allowed}
-    stale = set(mod.COLLECT_ALLOWLIST) - live_keys
-    assert not stale, f"stale COLLECT_ALLOWLIST entries: {sorted(stale)}"
+    """plan_lint rule 5: every .collect() in the package is either
+    bounded by its fluent chain (agg/limit/...) or adjudicated in the
+    ledger at the current fingerprint of its enclosing function."""
+    judged = audit.load_ledger()["adjudications"]
+    _, sites = audit.lint_collect_sites(os.path.join(REPO, "hetnetdb_spark"))
+    unjudged = [
+        (key, lineno)
+        for key, lineno, _, top in sites
+        if judged.get(key, {}).get("collect", {}).get("fingerprint")
+        != audit.site_fingerprint(key, top)
+    ]
+    assert not unjudged, f"unadjudicated .collect() sites: {unjudged}"
 
 
 def test_broadcast_fact_lint_flags_synthetic_violation(spark):
@@ -154,16 +135,8 @@ def test_broadcast_fact_lint_flags_synthetic_violation(spark):
 
     from tests.conftest import SF_DIR
 
-    mod = _load_plan_lint()
-
     def lint(df):
-        jplan = df._jdf.queryExecution().executedPlan()
-        jplan.executeCollect()
-        try:
-            root = jplan.finalPhysicalPlan()
-        except Exception:
-            root = jplan
-        return mod._lint_plan(root)
+        return audit.lint_plan(audit.execute(df))
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     probe = docs.select("doc_id")
@@ -200,8 +173,7 @@ def test_broadcast_fact_lint_flags_synthetic_violation(spark):
 def test_collect_lint_flags_synthetic_violation(tmp_path):
     """Rule 5 must exit non-clean on a bare data-sized collect: a
     synthetic module with `df.filter(...).collect()` (no bounding op
-    in the chain, not allowlisted) is FLAGGED."""
-    mod = _load_plan_lint()
+    in the chain, not adjudicated) is flagged."""
     pkg = tmp_path / "synthpkg"
     pkg.mkdir()
     (pkg / "bad.py").write_text(
@@ -210,6 +182,6 @@ def test_collect_lint_flags_synthetic_violation(tmp_path):
         "    ok = df.agg({'x': 'max'}).collect()\n"
         "    return rows, ok\n"
     )
-    bounded, allowed, flagged = mod.lint_collect_sites(str(pkg))
+    bounded, flagged = audit.lint_collect_sites(str(pkg))
     assert len(flagged) == 1 and flagged[0][1] == 2, flagged
     assert len(bounded) == 1, bounded

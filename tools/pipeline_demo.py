@@ -2,7 +2,8 @@
 chain (filter → exact dedup → near-dup → semantic dedup → data
 selection → packing) over a grown corpus and record, per stage, the
 wall and the ACTUAL shuffle bytes each exchange moved (from the
-executed plan's SQLMetrics — the same numbers the Spark UI shows).
+executed plan's SQLMetrics via ``audit.profile`` — the same numbers
+the Spark UI shows).
 
 The point of the artifact: the engine's scale claims are stated in
 terms of WHAT THE SHUFFLES CARRY (hashes/signatures/ids, never text
@@ -26,6 +27,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from hetnetdb_spark import registry  # noqa: E402
+from hetnetdb_spark.plans import audit  # noqa: E402
 from hetnetdb_spark.session import get_spark  # noqa: E402
 from tools import grown  # noqa: E402
 
@@ -39,57 +41,32 @@ CHAIN = [
 ]
 
 
-def _walk_metrics(node, out: dict) -> None:
-    cls = node.getClass().getSimpleName()
-    if "QueryStage" in cls:
-        _walk_metrics(node.plan(), out)
-        return
-    if "ReusedExchange" in cls:
-        return  # bytes were counted at the original exchange
-    name = node.nodeName()
-    is_shuffle = "Exchange" in name and "Broadcast" not in name
-    is_bcast = "BroadcastExchange" in name
-    if is_shuffle or is_bcast:
-        m = node.metrics()
-        it = m.keysIterator()
-        while it.hasNext():
-            k = it.next()
-            v = m.apply(k).value()
-            if is_shuffle and k == "shuffleBytesWritten":
-                out["shuffle_bytes"] += v
-            if is_shuffle and k == "shuffleRecordsWritten":
-                out["shuffle_records"] += v
-            if is_bcast and k == "dataSize":
-                out["broadcast_bytes"] += v
-        if is_shuffle:
-            out["n_shuffles"] += 1
-        else:
-            out["n_broadcasts"] += 1
-        # Per-exchange attribution (r14): the aggregate byte total
-        # cannot distinguish the fixture-split spread() repartition
-        # (text, by design, no-op at production split counts) from a
-        # plan regression moving corpus payloads. simpleString's
-        # first line carries the partitioning + origin tag
-        # (REPARTITION_BY_NUM vs ENSURE_REQUIREMENTS) and the output
-        # columns.
-        if is_shuffle:
-            try:
-                desc = node.simpleString(8).splitlines()[0][:160]
-            except Exception:
-                desc = name
-            b = r = 0
-            it = node.metrics().keysIterator()
-            while it.hasNext():
-                k = it.next()
-                if k == "shuffleBytesWritten":
-                    b = node.metrics().apply(k).value()
-                elif k == "shuffleRecordsWritten":
-                    r = node.metrics().apply(k).value()
-            out.setdefault("exchanges", []).append(
-                {"node": desc, "bytes": int(b), "records": int(r)}
-            )
-    for i in range(node.children().size()):
-        _walk_metrics(node.children().apply(i), out)
+def _exchange_stats(records: list[dict]) -> dict:
+    """Shuffle and broadcast totals from ``audit.profile`` records.
+
+    Per-exchange attribution (r14): the byte total cannot tell the
+    fixture-split spread() repartition (text, by design, a no-op at
+    production split counts) from a plan regression moving corpus
+    payloads; each exchange's first line carries its partitioning and
+    origin tag (REPARTITION_BY_NUM vs ENSURE_REQUIREMENTS)."""
+    shuffles = [r for r in records if audit.is_shuffle(r["operator"])]
+    bcasts = [r for r in records if "BroadcastExchange" in r["operator"]]
+    exchanges = [
+        {
+            "node": r["node"],
+            "bytes": int(r["metrics"].get("shuffleBytesWritten", 0)),
+            "records": int(r["metrics"].get("shuffleRecordsWritten", 0)),
+        }
+        for r in shuffles
+    ]
+    return {
+        "shuffle_bytes": sum(e["bytes"] for e in exchanges),
+        "shuffle_records": sum(e["records"] for e in exchanges),
+        "broadcast_bytes": sum(r["metrics"].get("dataSize", 0) for r in bcasts),
+        "n_shuffles": len(shuffles),
+        "n_broadcasts": len(bcasts),
+        "exchanges": exchanges,
+    }
 
 
 def main() -> int:
@@ -108,19 +85,9 @@ def main() -> int:
         df = fn(spark, corpus)
         n_out = len(df.toPandas())
         wall = time.perf_counter() - t0
-        stats = {
-            "shuffle_bytes": 0,
-            "shuffle_records": 0,
-            "broadcast_bytes": 0,
-            "n_shuffles": 0,
-            "n_broadcasts": 0,
-        }
-        jplan = df._jdf.queryExecution().executedPlan()
-        try:
-            root = jplan.finalPhysicalPlan()
-        except Exception:
-            root = jplan
-        _walk_metrics(root, stats)
+        # Re-runs only the final stage: the materialized exchanges
+        # keep the metrics of the timed run.
+        stats = _exchange_stats(audit.profile(df))
         rec = {"stage": name, "desc": desc, "wall_s": round(wall, 3),
                "rows_out": n_out, **stats}
         rows.append(rec)

@@ -1,78 +1,24 @@
-"""Plan lint: mechanized 100 TB-posture audits of executed plans.
+"""Plan lint: refresh PLAN_LEDGER.json and fail on any unadjudicated
+100 TB-posture lint hit.
 
-Six rules, each a scale-killer class the per-round judge audit
-used to check by hand. Rules 1-4 and 6 run over every PURE
-registered query's executed (post-AQE) physical plan; rule 5 is a
-STATIC source scan (so it also covers the impure/streaming queries
-the plan walk can't execute):
+    python tools/plan_lint.py
 
-1. **Generate-fed broadcast** (round 7). Catalyst estimates an
-   explode (`Generate`) at its CHILD's size, so a relation that fans
-   out 100-300× still looks broadcastable, and the "broadcast" ships
-   gigabytes to the driver at corpus scale (PLANS.md,
-   "explode-underestimation broadcast trap"). Flag every
-   BroadcastExchange whose subtree contains a Generate node.
+Takes no arguments. It re-executes, at the ledger's ``sf_dir``, every
+pure query whose fingerprint differs from its ledger row, plus every
+new pure query (all of them when the pyspark version or the rules'
+fingerprint differs from the ledger's header), and rewrites the
+ledger. Counts come from each query's initial (pre-AQE) plan, lint
+hits from the plan that executed; the six rules, the plan walker and
+``refresh`` live in ``hetnetdb_spark/plans/audit.py``. A second run
+changes nothing.
 
-2. **CartesianProduct** (round 9). An unkeyed join is O(N·M) at any
-   scale; the only acceptable instances pair fixture-bounded dims or
-   ARE the cross-join contract. Flag every CartesianProduct node.
-
-3. **Driver materialization bound** (round 9). CollectLimit ships up
-   to `limit` rows to the driver and LocalTableScan holds its rows
-   IN the driver; either with a row bound above DRIVER_ROWS_K means
-   a driver-side bottleneck no executor count can fix. Flag
-   CollectLimitExec whose limit exceeds DRIVER_ROWS_K and
-   LocalTableScanExec holding more than DRIVER_ROWS_K rows.
-
-4. **Pickled row-UDF** (round 12). BatchEvalPython serializes every
-   row through pickle to a Python worker — the boundary the
-   U1 contract certifies exactly once. Any other occurrence means a
-   query silently left the JVM hot path. Arrow crossings
-   (ArrowEvalPython, AggregateInPandas, FlatMapGroupsInPandas,
-   MapInPandas/InArrow) are sanctioned and not flagged.
-
-5. **Scalar-collect discipline** (round 13). Every `.collect()` in
-   the package must be driver control flow over a BOUNDED frame —
-   the tail of a chain containing agg/limit/head/first/take/tail,
-   or an adjudicated site (manifest reads, metadata sources,
-   1-row sink tables). A bare `df.collect()` over a data-sized
-   frame is the one driver bottleneck no executor count can fix;
-   this rule makes it impossible to add one silently.
-
-6. **Broadcast of a join-fed fact-table subtree** (round 14 — the
-   generalized l02 OOM lesson). The r13 local-cluster probe caught
-   l02/l59 broadcasting a semi-join of `documents` whose in-memory
-   HashedRelation was ~50× its static estimate: a JOIN output's
-   static estimate does not scale reliably with its inputs, so the
-   relation "looks broadcastable" at EVERY corpus size while the
-   real build is GBs (dedup.py:448 comment). Flag every
-   BroadcastExchange whose build subtree reaches a fact-table scan
-   (documents/lineitem/orders/events/embeddings — the tables that
-   grow with the corpus) through a JOIN, without an intervening
-   bounding node (aggregation, top-k, limit). A plain
-   Filter/Project-over-scan build side is NOT flagged: its static
-   estimate is proportional to the corpus, so the same query at
-   production scale statically plans a non-broadcast join — the
-   misestimate class simply cannot arise (the r14 first-draft rule
-   flagged all 30+ such benign fixture-scale broadcasts, q3's
-   date-filtered orders included). Generate-fed broadcasts are rule
-   1's jurisdiction. Known limitations, accepted per the r13
-   verdict's prescription: an aggregation whose GROUP BY key is
-   itself corpus-sized also "bounds" under this rule, and an eager
-   localCheckpoint severs the subtree so scans below it are
-   invisible — the allowlist/docstring reasons must argue actual
-   boundedness, not just rule passage.
-
-A flag is not automatically a bug: broadcasting a VOCAB-BOUNDED
-aggregate of an exploded relation is the right plan, and the
-cross-join CONTRACT query necessarily contains a cartesian. Those
-cases are adjudicated in the per-rule allowlists with the reason;
-anything NOT allowlisted exits 1 so the round checklist catches new
-instances the moment they appear.
-
-Usage:
-    python tools/plan_lint.py            # all pure queries at sf0.01
-    python tools/plan_lint.py l67 w12    # name-substring filter
+Exit 1 on any lint hit without an adjudication at the code's current
+fingerprint: a new hit, or an adjudication whose code changed since
+it was judged (the message quotes the dropped reason). To adjudicate,
+add ``{"<rule>": {"reason": "...", "fingerprint": ""}}`` under the
+query name (or the ``relpath:function`` collect site) in the ledger's
+``adjudications`` and run the tool again: it stamps the fingerprint.
+Commit the ledger diff.
 """
 
 from __future__ import annotations
@@ -80,415 +26,29 @@ from __future__ import annotations
 import os
 import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hetnetdb_spark import registry  # noqa: E402
+from hetnetdb_spark.plans import audit  # noqa: E402
 from hetnetdb_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_LINT_SF_DIR", "/root/testdata/sf0.01")
-
-#: query -> reason a Generate-fed BroadcastExchange is CORRECT there.
-ALLOWLIST: dict[str, str] = {
-    "l06_tfidf_top_terms": "df side is the vocab-bounded term table",
-    "l19_decontamination": "build side is the bounded benchmark gram set",
-    "l30_contamination_report": "build side is the bounded benchmark gram set",
-    "l43_bigram_logprob": "count tables are vocab-bounded",
-    "l25_unigram_logprob": "unigram LM table is vocab-bounded",
-    "l28_bigram_counts": "bigram vocabulary is bounded",
-    "l44_ngram_diversity": "n-gram distinct tables are vocab-bounded",
-    "l49_pmi_collocations": "marginals are vocab-bounded (plan-pinned)",
-    "l60_vocab_oov_rate": "reference vocabulary is bounded",
-    "l52_entropy_profile": "per-source vocab aggregates are bounded",
-    "l02_minhash_neardup": "band rows are thinner than the doc scan (≤2× bytes)",
-    "l02_simhash_neardup": "band rows are one long per doc-band (thinner than scan)",
-    "l02_ngram_jaccard": "fenced to a 60-doc prefix (oracle scale)",
-    "l04_simjoin_lsh": "band rows are (band key, id) — thinner than the vector scan",
-    "l04_simjoin_lsh_tuned": "same banding thinness argument as l04",
-    "l70_minhash_recall_curve": "band rows thinner than scan; posting join pins merge",
-    "l71_simhash_recall_curve": "fingerprints are one long per doc",
-    "l16_components_lsh": "band rows thinner than the vector scan",
-    "l59_minhash_index_probe": "probe batch is doc_id%10 — a bounded slice",
-    "l34_passage_dedup": "hash-only projection, narrower than the scan",
-    "l33_incremental_dedup": "hash-only projection, narrower than the scan",
-    "l35_semantic_dedup": "cluster centroids are K-bounded",
-    "l73_semantic_dedup_refined": "both broadcast sides are K-bounded centroid tables (seeds + 6dp refined means)",
-    "l23_fuzzy_join": "blocking-key side is bounded",
-    "l63_cross_source_overlap": "band rows thinner than scan; pairs join raw scans",
-    "l41_heavy_hitters": "candidate set is ≤ K×partitions rows by the Misra-Gries bound",
-    "a29_approx_topk_contract": "explode of a 5-element sketch array from a 1-row agg",
-    "l77_dsir_selection": "broadcast sides are the B=64-row bucket log-ratio table and a 1-row total — bounded by the bucket count, never by the corpus",
-    "l79_prep_pipeline_e2e": "band rows are thinner than the doc scan (the l02 argument, composed); the pair list is checkpointed and candidate-bounded",
-}
-
-#: query -> reason a CartesianProduct is CORRECT there.
-CARTESIAN_ALLOWLIST: dict[str, str] = {
-    "j07_cross_join": "IS the cross-join contract (region×nation, 5×25 bounded dims)",
-}
-
-#: Rows a single plan node may ship to / hold in the driver before
-#: the lint flags it. Headline top-k queries return ≤ a few thousand
-#: rows; anything above this bound means a query's RESULT (not its
-#: inputs) stopped being driver-sized, which breaks the
-#: "collect only scalars and bounded results" posture.
-DRIVER_ROWS_K = 100_000
-
-#: query -> reason a >DRIVER_ROWS_K CollectLimit/LocalTableScan is
-#: CORRECT there.
-DRIVER_ROWS_ALLOWLIST: dict[str, str] = {}
-
-#: query -> reason a pickled row-at-a-time Python UDF
-#: (BatchEvalPython) is CORRECT there. Rule 4 (round 12): the row
-#: UDF serializes every row through pickle — the ~10-100× slow path
-#: the U-contract certifies exactly once. Anything else paying that
-#: boundary is a scale bug; the Arrow paths (ArrowEvalPython,
-#: AggregateInPandas, FlatMapGroupsInPandas, MapInPandas/Arrow) are
-#: the sanctioned Python crossings and are NOT flagged here.
-BATCH_EVAL_ALLOWLIST: dict[str, str] = {
-    "u01_python_udf": "IS the U1 row-UDF contract query",
-}
-
-#: Rule 5 (round 13) — scalar-collect discipline, STATIC source rule.
-#: Every `.collect()` in the package must be the tail of a fluent
-#: chain containing a bounding operation (`agg`, `limit`, `head`,
-#: `first`, `take`, `tail` — aggregation to ≤K rows or an explicit
-#: row cap), or be individually adjudicated below. This pins the
-#: pattern the r12 verdict audited by hand: driver fetches are
-#: control-flow scalars (watermark probes, convergence sums), never
-#: data-sized results. Key = "relpath:innermost_function".
-COLLECT_BOUNDING = frozenset(
-    {"agg", "limit", "head", "first", "take", "tail"}
-)
-COLLECT_ALLOWLIST: dict[str, str] = {
-    "hetnetdb_spark/catalog.py:_catalog_table_location": (
-        "DESCRIBE FORMATTED metadata — rows bounded by column count"
-    ),
-    "hetnetdb_spark/sources/io.py:ingest": (
-        "exactly-once manifest file — one row per ingested batch"
-    ),
-    "hetnetdb_spark/sources/io.py:_cow_orders_store": (
-        "distinct o_year — bounded by the 7-year TPC-H date range"
-    ),
-    "hetnetdb_spark/operators/sql_surface.py:o10_recursive_cte": (
-        "recursive-CTE result is ≤ BOM depth rows (bounded at any "
-        "SF); collected to re-materialize under the restored row "
-        "limit"
-    ),
-    "hetnetdb_spark/streaming/queries.py:t15_listener_metrics": (
-        "1-row memory-sink count table"
-    ),
-    "hetnetdb_spark/streaming/queries.py:_time_split_events": (
-        "select(percentile_approx(...)) is an UNGROUPED aggregate "
-        "expression — 1 row; the chain heuristic can't see through "
-        "select()"
-    ),
-    "hetnetdb_spark/streaming/queries.py:t25_state_reader": (
-        "state-metadata source — one row per stateful operator"
-    ),
-}
-
-
-def lint_collect_sites(pkg_root: str) -> tuple[list, list, list]:
-    """Rule 5 core: AST-scan every .py under pkg_root for `.collect()`
-    call sites. Returns (bounded, allowed, flagged) lists of
-    (key, chain) tuples. Pure static analysis — no Spark session."""
-    import ast
-    import pathlib
-
-    repo = pathlib.Path(ROOT)
-    bounded, allowed, flagged = [], [], []
-    for path in sorted(pathlib.Path(pkg_root).rglob("*.py")):
-        try:
-            rel = str(path.relative_to(repo))
-        except ValueError:  # scanning a tree outside the repo (tests)
-            rel = path.name
-        tree = ast.parse(path.read_text())
-        funcs = [
-            (n.lineno, n.end_lineno, n.name)
-            for n in ast.walk(tree)
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-        ]
-
-        def innermost(lineno: int) -> str:
-            cands = [f for f in funcs if f[0] <= lineno <= f[1]]
-            return max(cands, key=lambda f: f[0])[2] if cands else "<module>"
-
-        for node in ast.walk(tree):
-            if not (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "collect"
-            ):
-                continue
-            # walk the fluent chain: x.a(...).b(...).collect()
-            chain: list[str] = []
-            cur = node.func.value
-            while True:
-                if isinstance(cur, ast.Call) and isinstance(
-                    cur.func, ast.Attribute
-                ):
-                    chain.append(cur.func.attr)
-                    cur = cur.func.value
-                elif isinstance(cur, ast.Attribute):
-                    chain.append(cur.attr)
-                    cur = cur.value
-                else:
-                    break
-            key = f"{rel}:{innermost(node.lineno)}"
-            rec = (key, node.lineno, chain)
-            if set(chain) & COLLECT_BOUNDING:
-                bounded.append(rec)
-            elif key in COLLECT_ALLOWLIST:
-                allowed.append(rec)
-            else:
-                flagged.append(rec)
-    return bounded, allowed, flagged
-
-
-#: Rule 6 — fact tables: the fixtures that scale with the corpus.
-#: Matched as path fragments, so bucketed/persisted DERIVED copies
-#: (e.g. a spark-warehouse `orders_buckets` table) match too — a
-#: corpus-sized copy is exactly as unbroadcastable as its source.
-FACT_TABLES = ("documents", "lineitem", "orders", "events", "embeddings")
-
-#: Rule 6 — plan nodes that bound a broadcast build subtree.
-#: HashAggregate/SortAggregate/ObjectHashAggregate/AggregateInPandas
-#: all contain "Aggregate"; CollectLimit/GlobalLimit/LocalLimit all
-#: contain "Limit".
-RULE6_BOUNDING = ("Aggregate", "TakeOrderedAndProject", "Limit")
-
-#: query -> reason a fact-scan-fed BroadcastExchange is CORRECT there
-#: (argue actual boundedness at 100 TB, not just that the rule fires).
-BROADCAST_FACT_ALLOWLIST: dict[str, str] = {
-    "l73_semantic_dedup_refined": (
-        "the flagged broadcast builds the planted-variant universe: an"
-        " inner equi-join of embeddings ids against the 48-row planted"
-        "-seed list (vec_id < 48 literal filter) — output <= 48 rows by"
-        " vec_id uniqueness, which the join-estimate rule cannot see;"
-        " every other broadcast side is a K-bounded centroid aggregate"
-        " (plan-asserted in tests/test_plans.py). AQE plan variance"
-        " makes the hit intermittent (sometimes the path crosses a"
-        " materialized shuffle and self-clears)."
-    ),
-}
-
-
-def _scan_location(node) -> str:
-    """Best-effort source location string for a scan node."""
-    cls = node.getClass().getSimpleName()
-    if "FileSourceScan" not in cls and "BatchScan" not in cls:
-        return ""
-    try:
-        paths = node.relation().location().rootPaths()
-        return ";".join(str(paths.apply(i)) for i in range(paths.size()))
-    except Exception:
-        # DSv2 / renamed accessor: the verbose string carries the
-        # location (possibly truncated — acceptable for a fallback).
-        try:
-            return node.verboseString(25)
-        except Exception:
-            return node.toString()
-
-
-def _unbounded_fact_scans(node, join_seen: bool = False, depth: int = 0) -> set[str]:
-    """Fact tables reachable below *node* through a JOIN with no
-    bounding op AND no materialized shuffle boundary between — the
-    estimate class that does not self-correct with corpus size.
-
-    The shuffle-boundary stop (depth > 0 only — the broadcast's own
-    input may arrive through one): AQE converts SMJ→BHJ from the
-    MEASURED size of an already-materialized shuffle stage, so a
-    broadcast whose scan path crosses a ShuffleExchange was sized
-    with real bytes and the same plan at production scale measures
-    big and stays SMJ (q21's EXISTS/NOT-EXISTS legs). l02's OOM
-    broadcast had NO shuffle on its scan path — only the static
-    estimate existed, and it was ~50× low."""
-    cls = node.getClass().getSimpleName()
-    if "QueryStage" in cls and "Shuffle" not in cls:
-        return _unbounded_fact_scans(node.plan(), join_seen, depth)
-    if "ReusedExchange" in cls:
-        try:
-            return _unbounded_fact_scans(node.child(), join_seen, depth)
-        except Exception:
-            return set()
-    if depth > 0 and ("ShuffleExchange" in cls or "ShuffleQueryStage" in cls):
-        return set()
-    if "ShuffleQueryStage" in cls:
-        return _unbounded_fact_scans(node.plan(), join_seen, depth)
-    name = node.nodeName()
-    if any(f in name for f in RULE6_BOUNDING):
-        return set()
-    if "Join" in name or "CartesianProduct" in name:
-        join_seen = True
-    found: set[str] = set()
-    if join_seen:
-        loc = _scan_location(node)
-        if loc:
-            found |= {t for t in FACT_TABLES if f"/{t}" in loc}
-    for i in range(node.children().size()):
-        found |= _unbounded_fact_scans(
-            node.children().apply(i), join_seen, depth + 1
-        )
-    return found
-
-
-def _subtree_has(node, fragment: str) -> bool:
-    if fragment in node.nodeName():
-        return True
-    cls = node.getClass().getSimpleName()
-    if "QueryStage" in cls:
-        return _subtree_has(node.plan(), fragment)
-    if "ReusedExchange" in cls:
-        try:
-            return _subtree_has(node.child(), fragment)
-        except Exception:
-            return False
-    for i in range(node.children().size()):
-        if _subtree_has(node.children().apply(i), fragment):
-            return True
-    return False
-
-
-def _lint_plan(root) -> dict[str, int]:
-    """Walk one executed plan; return per-rule hit counts.
-
-    `accessor_error` counts CollectLimitExec/LocalTableScanExec nodes
-    whose size accessors raised (e.g. renamed by a Spark upgrade).
-    It is reported as a FLAG by the caller: a broken accessor must
-    fail the gate loudly, not silently retire rule 3."""
-    hits = {
-        "generate_broadcast": 0,
-        "cartesian": 0,
-        "driver_rows": 0,
-        "accessor_error": 0,
-        "batch_eval_python": 0,
-        "broadcast_fact_scan": 0,
-    }
-
-    def walk(node) -> None:
-        name = node.nodeName()
-        if "BroadcastExchange" in name and _subtree_has(node, "Generate"):
-            hits["generate_broadcast"] += 1
-        if "BroadcastExchange" in name:
-            tables = _unbounded_fact_scans(node)
-            if tables:
-                hits["broadcast_fact_scan"] += 1
-        if "CartesianProduct" in name:
-            hits["cartesian"] += 1
-        # Rule 4: BatchEvalPython is the PICKLED row-at-a-time UDF
-        # node (Arrow crossings plan as ArrowEvalPython /
-        # *InPandas/*InArrow and are sanctioned).
-        if "BatchEvalPython" in name:
-            hits["batch_eval_python"] += 1
-        cls = node.getClass().getSimpleName()
-        if cls == "CollectLimitExec":
-            try:
-                if node.limit() > DRIVER_ROWS_K:
-                    hits["driver_rows"] += 1
-            except Exception:
-                hits["accessor_error"] += 1
-        elif cls == "LocalTableScanExec":
-            try:
-                if node.rows().size() > DRIVER_ROWS_K:
-                    hits["driver_rows"] += 1
-            except Exception:
-                hits["accessor_error"] += 1
-        if "QueryStage" in cls:
-            walk(node.plan())
-            return
-        for i in range(node.children().size()):
-            walk(node.children().apply(i))
-
-    walk(root)
-    return hits
 
 
 def main() -> int:
-    # Rule 5 runs first: static, no Spark, covers IMPURE queries the
-    # plan rules can't execute.
-    c_bounded, c_allowed, c_flagged = lint_collect_sites(
-        os.path.join(ROOT, "hetnetdb_spark")
-    )
-    for key, lineno, chain in c_allowed:
-        print(f"allow  {key}:{lineno} — collect: {COLLECT_ALLOWLIST[key]}")
-    for key, lineno, chain in c_flagged:
-        print(
-            f"FLAG   {key}:{lineno} — unbounded .collect() "
-            f"(chain: {'.'.join(reversed(chain)) or '<var>'}), unadjudicated"
-        )
-    print(
-        f"rule 5 (scalar-collect): {len(c_bounded)} bounded-by-chain, "
-        f"{len(c_allowed)} allowlisted, {len(c_flagged)} FLAGGED"
-    )
-    if len(sys.argv) > 1 and sys.argv[1] == "--collect-only":
-        return 1 if c_flagged else 0
-
-    registry.load_all()
-    filters = sys.argv[1:]
+    if len(sys.argv) > 1:
+        raise SystemExit("usage: python tools/plan_lint.py (no arguments)")
+    ledger = audit.load_ledger()
     spark = get_spark("plan-lint")
     spark.sparkContext.setLogLevel("ERROR")
-
-    names = [
-        n
-        for n in registry.QUERIES
-        if n not in registry.IMPURE
-        and (not filters or any(f in n for f in filters))
-    ]
-    rules = (
-        ("generate_broadcast", "generate-fed broadcast", ALLOWLIST),
-        ("cartesian", "CartesianProduct", CARTESIAN_ALLOWLIST),
-        (
-            "driver_rows",
-            f"driver-side rows > {DRIVER_ROWS_K}",
-            DRIVER_ROWS_ALLOWLIST,
-        ),
-        # Never allowlisted: a raised size accessor means rule 3 is
-        # broken (Spark upgrade renamed limit()/rows()), and the gate
-        # must fail loudly rather than go silently green.
-        ("accessor_error", "driver-rows accessor raised", {}),
-        (
-            "batch_eval_python",
-            "pickled row-UDF (BatchEvalPython)",
-            BATCH_EVAL_ALLOWLIST,
-        ),
-        (
-            "broadcast_fact_scan",
-            "broadcast of unbounded fact-table subtree (l02-OOM shape)",
-            BROADCAST_FACT_ALLOWLIST,
-        ),
-    )
-    flagged, allowed, errs = [], [], []
-    for name in names:
-        try:
-            df = registry.QUERIES[name](spark, SF_DIR)
-            jplan = df._jdf.queryExecution().executedPlan()
-            jplan.executeCollect()
-            try:
-                root = jplan.finalPhysicalPlan()
-            except Exception:
-                root = jplan
-            hits = _lint_plan(root)
-        except Exception as exc:  # noqa: BLE001 — record, keep linting
-            errs.append((name, str(exc)[:120]))
-            continue
-        for key, label, allowlist in rules:
-            if not hits[key]:
-                continue
-            if name in allowlist:
-                allowed.append((name, key))
-                print(f"allow  {name:40s} ({hits[key]}) — {label}: {allowlist[name]}")
-            else:
-                flagged.append((name, key))
-                print(f"FLAG   {name:40s} ({hits[key]}) — {label}, unadjudicated")
-    for name, e in errs:
-        print(f"ERR    {name:40s} {e}")
+    fresh, changes, flags = audit.refresh(spark, ledger)
+    audit.write_ledger(fresh)
+    for line in changes + flags:
+        print(line)
+    n_judged = sum(len(rules) for rules in fresh["adjudications"].values())
     print(
-        f"\n{len(names)} pure queries linted at {SF_DIR} "
-        f"(rules: generate-broadcast, cartesian, driver-rows>{DRIVER_ROWS_K}, "
-        f"batch-eval-python, broadcast-fact-scan): "
-        f"{len(allowed)} allowlisted, {len(flagged)} FLAGGED, {len(errs)} errors"
+        f"\n{len(fresh['queries'])} pure queries at {fresh['sf_dir']}: "
+        f"{len(changes)} with changed counts, {n_judged} adjudications, "
+        f"{len(flags)} FLAGGED; {audit.LEDGER.name} rewritten"
     )
-    return 1 if flagged or errs or c_flagged else 0
+    return 1 if flags else 0
 
 
 if __name__ == "__main__":

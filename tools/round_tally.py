@@ -1,10 +1,11 @@
 """Generated end-of-round tally — one authoritative closing block.
 
 Hand-written closing numbers drift. This tool derives every number
-from the live registry and the newest committed artifacts, labels
-each with its source and mtime, and prints a markdown block to paste
-VERBATIM into PLANS.md: it can only be older than what a judge
-re-derives (and it says how old), never disagree.
+from the live registry and the newest committed artifacts (highest
+round number in the file name), labels each with its source and
+mtime, and prints a markdown block to paste VERBATIM into PLANS.md:
+it can only be older than what a judge re-derives (and it says how
+old), never disagree.
 
 Usage:
     python tools/round_tally.py            # artifact-only (no pytest)
@@ -45,8 +46,16 @@ def _age(path: str) -> str:
 
 
 def _newest(pattern: str) -> str | None:
+    """The match with the highest round number ``_r<N>`` in its name
+    (a checkout gives every file the same mtime); within a round the
+    plain name beats a suffixed variant (``_r16`` over ``_r16_c8``)."""
+
+    def order(path: str) -> tuple[int, bool, str]:
+        m = re.search(r"_r(\d+)(.*)\.\w+$", os.path.basename(path))
+        return (int(m.group(1)), not m.group(2), m.group(2)) if m else (-1, True, "")
+
     hits = glob.glob(os.path.join(ROOT, pattern))
-    return max(hits, key=os.path.getmtime) if hits else None
+    return max(hits, key=order) if hits else None
 
 
 def main() -> int:
