@@ -13,6 +13,7 @@ loop.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,9 +41,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S1 — parquet scan of one base table.
 
     No explicit schema is passed: parquet is self-describing and the
-    footer types match ``schemas.SCHEMAS`` (validated in tests);
-    passing a mismatched-precision timestamp schema would insert a
-    cast above the scan and block filter pushdown.
+    footer's names, order and types match ``schemas.SCHEMAS``, except
+    that three declared ``timestamp`` columns (``o_orderdate``,
+    ``l_shipdate``, ``events.ts``) read as ``timestamp_ntz``
+    (``tests/test_invariants.py`` checks both). Passing the declared
+    schema instead would insert a cast above the scan and block filter
+    pushdown.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
@@ -120,6 +124,13 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFram
 #: repointing after a switch back to an earlier sf).
 _BOUND_SF: dict[tuple[str, str], str] = {}
 
+#: Held for the body of `register_views`. Two callers that both see a
+#: table unbound (the serve host's background registration and a query
+#: that registers its own tables) would otherwise both DROP/CREATE it;
+#: serialized, the second finds it in `_BOUND_SF` and skips. Reentrant
+#: so a caller already inside may register again.
+_REGISTER_LOCK = threading.RLock()
+
 
 def _catalog_table_location(spark: SparkSession, name: str) -> str | None:
     if not spark.catalog.tableExists(name):
@@ -145,47 +156,57 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     path). A stale metastore entry pointing at another sf_dir is
     dropped and recreated.
 
-    CBO + join reordering are enabled here — scoped to the SQL
-    path — rather than session-wide: stats exist only for these
-    catalog tables, and CBO's per-query estimation pass costs
-    ~30-40 ms even on stat-less single-table plans (measured on
-    q1), a pure tax on the DataFrame path where Spark's default
-    (CBO off, AQE on) is already the right posture.
+    CBO + join reordering are switched on here, and ``spark.conf.set``
+    makes that session-wide: every later DataFrame query in the
+    session is planned with CBO too, not only the SQL path. That is
+    harmless for the registry: with every table registered at sf0.01,
+    none of the 244 pure queries' initial physical plans differs
+    between CBO on and off (expression ids normalised;
+    ``tests/test_plans.py`` pins the 8 headline queries). Stats exist
+    only for these catalog tables, and the DataFrame path reads
+    parquet files, not the tables.
+
+    One stats scan per table: ``ANALYZE ... FOR COLUMNS`` records the
+    table's size and row count along with the column stats, so the
+    table-level ``ANALYZE ... COMPUTE STATISTICS`` runs only for a
+    table without an analyzable column.
     """
-    configure(spark)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    for n in names or TABLE_NAMES:
-        if n == "events":
-            load(spark, sf_dir, n).createOrReplaceTempView(n)
-            continue
-        key = (spark.sparkContext.applicationId, n)
-        if _BOUND_SF.get(key) == sf_dir:
-            continue
-        path = table_path(sf_dir, n)
-        spark.catalog.dropTempView(n)  # a temp view would shadow the table
-        if _catalog_table_location(spark, n) != path:
-            spark.sql(f"DROP TABLE IF EXISTS {n}")
-            spark.sql(f"CREATE TABLE {n} USING parquet LOCATION '{path}'")
-        # Table-level stats (size/rows) plus per-column NDV/min/max —
-        # without column stats CBO falls back to worst-case join
-        # cardinalities and reordering has nothing to work with.
-        # ANALYZE FOR COLUMNS rejects nested types (array/map/struct).
-        # timestamp_ntz is excluded as a workaround: Spark 4.1's CBO
-        # FilterEstimation has no case for TimestampNTZType and throws
-        # scala.MatchError at plan time if such a column carries stats
-        # and appears in a comparison filter.
-        spark.sql(f"ANALYZE TABLE {n} COMPUTE STATISTICS")
-        atomic = [
-            f.name
-            for f in spark.table(n).schema.fields
-            if f.dataType.typeName()
-            not in ("array", "map", "struct", "variant", "udt", "timestamp_ntz")
-        ]
-        if atomic:
-            cols = ", ".join(atomic)
-            spark.sql(f"ANALYZE TABLE {n} COMPUTE STATISTICS FOR COLUMNS {cols}")
-        _BOUND_SF[key] = sf_dir
+    with _REGISTER_LOCK:
+        configure(spark)
+        spark.conf.set("spark.sql.cbo.enabled", "true")
+        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+        for n in names or TABLE_NAMES:
+            if n == "events":
+                load(spark, sf_dir, n).createOrReplaceTempView(n)
+                continue
+            key = (spark.sparkContext.applicationId, n)
+            if _BOUND_SF.get(key) == sf_dir:
+                continue
+            path = table_path(sf_dir, n)
+            spark.catalog.dropTempView(n)  # a temp view would shadow the table
+            if _catalog_table_location(spark, n) != path:
+                spark.sql(f"DROP TABLE IF EXISTS {n}")
+                spark.sql(f"CREATE TABLE {n} USING parquet LOCATION '{path}'")
+            # Per-column NDV/min/max (plus size/rows) — without column
+            # stats CBO falls back to worst-case join cardinalities and
+            # reordering has nothing to work with. ANALYZE FOR COLUMNS
+            # rejects nested types (array/map/struct). timestamp_ntz is
+            # excluded as a workaround: Spark 4.1's CBO FilterEstimation
+            # has no case for TimestampNTZType and throws
+            # scala.MatchError at plan time if such a column carries
+            # stats and appears in a comparison filter.
+            atomic = [
+                f.name
+                for f in spark.table(n).schema.fields
+                if f.dataType.typeName()
+                not in ("array", "map", "struct", "variant", "udt", "timestamp_ntz")
+            ]
+            if atomic:
+                cols = ", ".join(atomic)
+                spark.sql(f"ANALYZE TABLE {n} COMPUTE STATISTICS FOR COLUMNS {cols}")
+            else:
+                spark.sql(f"ANALYZE TABLE {n} COMPUTE STATISTICS")
+            _BOUND_SF[key] = sf_dir
 
 
 def spread(df: DataFrame, key: str = "doc_id") -> DataFrame:

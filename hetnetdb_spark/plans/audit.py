@@ -466,13 +466,15 @@ def query_fingerprints() -> dict[str, str]:
     }
 
 
-def refresh(spark: SparkSession, ledger: dict) -> tuple[dict, list[str], list[str]]:
+def refresh(spark: SparkSession, ledger: dict) -> tuple[dict, list[str], list[str], list[str]]:
     """Bring *ledger* up to date with the code; return ``(ledger,
-    changes, flags)``.
+    changes, flags, stale)``.
 
     Re-walks, at the ledger's ``sf_dir``, every pure query without a
-    row, whose fingerprint differs from its row, or whose adjudication
-    names another fingerprint; every query when the header (pyspark
+    row, whose fingerprint differs from its row, whose adjudication
+    names another fingerprint, or whose row's ``adjudicated`` rules
+    (the plan rules judged for it when it was walked) differ from its
+    current adjudications; every query when the header (pyspark
     version, rules fingerprint) differs. ``changes`` names each count
     that differs from the old row.
 
@@ -481,7 +483,10 @@ def refresh(spark: SparkSession, ledger: dict) -> tuple[dict, list[str], list[st
     ``flags`` names each lint hit (rule 5 over the whole package, the
     plan rules over the re-walked queries) left without an
     adjudication, saying which adjudications re-opened, and each query
-    that failed to execute."""
+    that failed to execute. ``stale`` names each adjudication of a
+    re-walked query that guarded no hit in that walk; it is kept, as a
+    hit may come and go with AQE's run-time sizes (l59's rule 1, l73's
+    rule 6)."""
     sf_dir = ledger["sf_dir"]
     old_rows = ledger.get("queries", {})
     judged = ledger.get("adjudications", {})
@@ -496,6 +501,7 @@ def refresh(spark: SparkSession, ledger: dict) -> tuple[dict, list[str], list[st
             current
             and old is not None
             and old["fingerprint"] == fp
+            and old.get("adjudicated", []) == sorted(judged.get(name, {}))
             and all(a["fingerprint"] in ("", fp) for a in judged.get(name, {}).values())
         ):
             rows[name] = old
@@ -529,4 +535,12 @@ def refresh(spark: SparkSession, ledger: dict) -> tuple[dict, list[str], list[st
             old = judged.get(key, {}).get(rule)
             why = f"re-opened, code changed since judged: {old['reason']}" if old else "unadjudicated"
             flags.append(f"FLAG   {key} — {RULES.get(rule, rule)}: {why}")
-    return {**head, "queries": rows, "adjudications": kept}, changes, flags
+    stale = []
+    for name, row in rows.items():
+        if name in hits:  # walked in this run
+            rules = sorted(kept.get(name, {}))
+            stale += [f"STALE  {name} — {rule}" for rule in rules if rule not in hits[name]]
+        else:
+            rules = row.get("adjudicated", [])
+        rows[name] = {**row, "adjudicated": rules}
+    return {**head, "queries": rows, "adjudications": kept}, changes, flags, stale

@@ -43,12 +43,29 @@ def test_fact_tables_grow_with_sf(spark):
 
 @needs_both
 def test_schemas_identical_across_sf(spark):
-    from hetnetdb_spark.schemas import TABLE_NAMES
+    """Every table's parquet footer has the names, order and types
+    ``schemas.SCHEMAS`` declares (a declared ``timestamp`` may read as
+    ``timestamp_ntz``), at both scales, and ``load`` gives the same
+    schema at both."""
+    from hetnetdb_spark.catalog import table_path
+    from hetnetdb_spark.schemas import SCHEMAS, TABLE_NAMES
+
+    def columns(schema):
+        return [
+            (f.name, f.dataType.simpleString().replace("timestamp_ntz", "timestamp"))
+            for f in schema.fields
+        ]
 
     for name in TABLE_NAMES:
         assert (
             load(spark, SF_SMALL, name).schema == load(spark, SF_MED, name).schema
         ), f"{name} schema drifts between scales"
+        for sf in (SF_SMALL, SF_MED):
+            footer = spark.read.parquet(table_path(sf, name)).schema
+            assert columns(footer) == columns(SCHEMAS[name]), (
+                f"{name} at {sf}: footer {footer.simpleString()} "
+                f"!= declared {SCHEMAS[name].simpleString()}"
+            )
 
 
 @needs_both
@@ -124,6 +141,39 @@ def test_register_views_rebinds_on_sf_switch(spark):
         if r.col_name.strip() == "Statistics"
     ]
     assert stats and "rows" in stats[0]
+
+
+def test_register_views_stats_take_one_scan(spark):
+    """``register_views`` runs one stats scan per table, ``ANALYZE ...
+    FOR COLUMNS``: it alone must leave each catalog table with its
+    true row count and every analyzable column with column stats."""
+    import re
+
+    from hetnetdb_spark.catalog import register_views
+    from hetnetdb_spark.schemas import TABLE_NAMES
+    from tests.conftest import SF_DIR
+
+    register_views(spark, SF_DIR)
+    skip = ("array", "map", "struct", "variant", "udt", "timestamp_ntz")
+    for name in TABLE_NAMES:
+        if name == "events":  # a temp view, not analyzed
+            continue
+        stats = [
+            r.data_type
+            for r in spark.sql(f"DESCRIBE EXTENDED {name}").collect()
+            if r.col_name.strip() == "Statistics"
+        ]
+        rows = re.search(r"(\d+) rows", stats[0]) if stats else None
+        assert rows, f"{name}: no row count in {stats}"
+        assert int(rows.group(1)) == load(spark, SF_DIR, name).count(), name
+        for f in spark.table(name).schema.fields:
+            if f.dataType.typeName() in skip:
+                continue
+            info = {
+                r.info_name: r.info_value
+                for r in spark.sql(f"DESCRIBE EXTENDED {name} {f.name}").collect()
+            }
+            assert info.get("distinct_count") not in (None, "NULL"), (name, f.name, info)
 
 
 @needs_both

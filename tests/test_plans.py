@@ -1428,6 +1428,45 @@ def test_s17_profile_has_no_expand(spark):
     assert plan.count("Union") >= 1, plan
 
 
+def test_cbo_leaves_headline_initial_plans_unchanged(spark):
+    """``register_views`` switches CBO and join reordering on for the
+    whole session, so every later DataFrame query is planned with
+    them. With every table registered, the 8 headline queries' initial
+    (pre-AQE) physical plans must be the same with CBO on and off."""
+    import re
+
+    from py4j.protocol import Py4JError
+
+    from bench import HEADLINE
+    from hetnetdb_spark.catalog import register_views
+
+    register_views(spark, SF_DIR)
+    keys = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+
+    def initial_plans(flag: str) -> dict[str, str]:
+        for k in keys:
+            spark.conf.set(k, flag)
+        out = {}
+        for name in HEADLINE:
+            plan = registry.QUERIES[name](spark, SF_DIR)._jdf.queryExecution().executedPlan()
+            try:
+                plan = plan.initialPlan()
+            except Py4JError:  # not adaptive: the plan is the initial one
+                pass
+            out[name] = re.sub(r"#\d+|plan_id=\d+", "#", plan.toString())
+        return out
+
+    try:
+        on, off = initial_plans("true"), initial_plans("false")
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert sorted(on) == sorted(HEADLINE)
+    changed = [n for n in HEADLINE if on[n] != off[n]]
+    assert not changed, "\n\n".join(f"{n}\nCBO on:\n{on[n]}\nCBO off:\n{off[n]}" for n in changed)
+
+
 def test_plan_ledger_is_current(spark):
     """Every pure query's plan-shape row in PLAN_LEDGER.json matches
     its code: rows whose fingerprint changed are re-walked at the
@@ -1440,8 +1479,21 @@ def test_plan_ledger_is_current(spark):
         "pyspark or the lint rules changed: run `python tools/plan_lint.py` "
         "and commit the ledger diff"
     )
-    _, changes, flags = audit.refresh(spark, ledger)
+    _, changes, flags, _ = audit.refresh(spark, ledger)
     assert not changes and not flags, "\n".join(changes + flags)
+
+
+def test_plan_ledger_flags_a_deleted_adjudication(spark):
+    """Deleting a live adjudication by hand re-walks its query, whose
+    code is unchanged, and the hit it guarded is flagged."""
+    import copy
+
+    name, rule = "a29_approx_topk_contract", "generate_broadcast"
+    ledger = copy.deepcopy(audit.load_ledger())
+    assert ledger["queries"][name]["adjudicated"] == [rule]
+    del ledger["adjudications"][name]
+    _, _, flags, _ = audit.refresh(spark, ledger)
+    assert flags == [f"FLAG   {name} — {audit.RULES[rule]}: unadjudicated"]
 
 
 def test_plan_ledger_reports_an_added_shuffle(spark, monkeypatch):
@@ -1457,5 +1509,5 @@ def test_plan_ledger_reports_an_added_shuffle(spark, monkeypatch):
     monkeypatch.setitem(registry.QUERIES, name, repartitioned)
     ledger = audit.load_ledger()
     before = ledger["queries"][name]["shuffles"]
-    _, changes, _ = audit.refresh(spark, ledger)
+    _, changes, _, _ = audit.refresh(spark, ledger)
     assert changes == [f"{name}: shuffles {before} -> {before + 1}"]

@@ -265,3 +265,153 @@ def test_concurrent_impure_and_pure_http(server, spark):
     # conf save/restore integrity across the concurrent pair
     assert spark.conf.get(provider_key, None) == before_provider
     assert spark.conf.get("spark.sql.session.timeZone") == before_tz == "UTC"
+
+
+# -- catalog registration in the background ---------------------------------
+
+
+@pytest.fixture
+def start_server(spark, monkeypatch):
+    """Start a server whose ``register_views`` is *stand_in*. The
+    handler's class state is put back afterwards, so the module's
+    shared server keeps answering."""
+    from hetnetdb_spark import catalog
+
+    for attr in ("spark", "registry", "sf_dir", "lock", "catalog"):
+        monkeypatch.setattr(serve_mod._Handler, attr, getattr(serve_mod._Handler, attr))
+    servers = []
+
+    def start(stand_in):
+        monkeypatch.setattr(catalog, "register_views", stand_in)
+        httpd = serve_mod.serve(SF_DIR, 0)
+        threading.Thread(target=httpd.serve_forever, daemon=True).start()
+        servers.append(httpd)
+        return f"http://127.0.0.1:{httpd.server_address[1]}"
+
+    yield start
+    for httpd in servers:
+        httpd.shutdown()
+
+
+def _gated_calls(base: str) -> dict[str, tuple]:
+    """One request to each route that waits for the catalog."""
+    return {
+        "health": ("GET", base + "/health", None),
+        "tables": ("GET", base + "/tables", None),
+        "query": (
+            "POST",
+            base + "/query",
+            b"SELECT COUNT(*) AS n FROM nation JOIN region ON n_regionkey = r_regionkey",
+        ),
+        "upload": ("POST", base + "/tables/bg_upload", b"city,pop\nparis,2100000\nlyon,520000\n"),
+    }
+
+
+def test_run_answers_while_catalog_registers(start_server):
+    """A named-query run and ``/queries`` answer while registration is
+    still blocked; the catalog routes answer only once it is released,
+    with the same payloads as a server whose catalog was ready."""
+    from hetnetdb_spark.catalog import register_views
+
+    release = threading.Event()
+
+    def blocked(spark, sf_dir, *names):
+        assert release.wait(timeout=120), "registration never released"
+        register_views(spark, sf_dir, *names)
+
+    base = start_server(blocked)
+    answers: dict[str, tuple] = {}
+    try:
+        code, body = _call("POST", base + "/run/q1_pricing_summary")
+        assert code == 200 and body["n"] > 0
+        assert _call("GET", base + "/queries")[0] == 200
+
+        def client(key, method, url, data):
+            result = _call(method, url, data)
+            answers[key] = (time.monotonic(), result)
+
+        threads = [
+            threading.Thread(target=client, args=(key, *call))
+            for key, call in _gated_calls(base).items()
+        ]
+        for t in threads:
+            t.start()
+        time.sleep(0.5)
+        assert answers == {}, f"answered before the catalog was ready: {answers}"
+        released_at = time.monotonic()
+        release.set()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        release.set()
+    assert sorted(answers) == ["health", "query", "tables", "upload"]
+    assert all(at >= released_at for at, _ in answers.values())
+    code, body = answers["health"][1]
+    assert code == 200 and body["status"] == "ok" and body["tables"] >= 10
+    code, body = answers["tables"][1]
+    assert code == 200 and {"region", "nation", "lineitem"} <= set(body["tables"])
+    assert answers["query"][1] == (200, {"rows": [{"n": 25}], "n": 1, "truncated": False})
+    code, body = answers["upload"][1]
+    assert code == 201 and body["table"] == "bg_upload" and body["rows"] == 2
+
+
+def test_failed_registration_answers_500_on_catalog_routes(start_server):
+    """A registration that raises turns every catalog route into a 500
+    naming the error, instead of a hang or "table not found"; named
+    runs still answer."""
+
+    def failing(spark, sf_dir, *names):
+        raise RuntimeError("metastore unreachable")
+
+    base = start_server(failing)
+    for key, (method, url, data) in _gated_calls(base).items():
+        code, body = _call(method, url, data)
+        assert code == 500, (key, code, body)
+        assert "metastore unreachable" in body["error"], (key, body)
+    code, body = _call("POST", base + "/run/q1_pricing_summary")
+    assert code == 200 and body["n"] > 0
+
+
+def test_concurrent_register_views_registers_once(spark, monkeypatch):
+    """Two threads registering the same unbound table at once (the
+    serve host's background thread and a query that registers its own
+    tables) both return, and the table is created and analyzed once."""
+    from hetnetdb_spark import catalog
+
+    key = (spark.sparkContext.applicationId, "supplier")
+    catalog._BOUND_SF.pop(key, None)
+    spark.sql("DROP TABLE IF EXISTS supplier")
+    statements: list[str] = []
+    sql = spark.sql
+
+    def counting_sql(text, *args, **kwargs):
+        statements.append(text)
+        return sql(text, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", counting_sql)
+    start = threading.Barrier(2)
+    errors: list[BaseException] = []
+
+    def register():
+        start.wait()
+        try:
+            catalog.register_views(spark, SF_DIR, "supplier")
+        except BaseException as exc:  # noqa: BLE001 — asserted below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=register) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    monkeypatch.undo()
+    assert errors == []
+    assert sum(s.startswith("CREATE TABLE supplier") for s in statements) == 1, statements
+    assert sum(s.startswith("ANALYZE TABLE supplier") for s in statements) == 1, statements
+    assert catalog._BOUND_SF[key] == SF_DIR
+    stats = [
+        r.data_type
+        for r in spark.sql("DESCRIBE EXTENDED supplier").collect()
+        if r.col_name.strip() == "Statistics"
+    ]
+    assert stats and "rows" in stats[0]

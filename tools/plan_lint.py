@@ -5,12 +5,13 @@
 
 Takes no arguments. It re-executes, at the ledger's ``sf_dir``, every
 pure query whose fingerprint differs from its ledger row, plus every
-new pure query (all of them when the pyspark version or the rules'
-fingerprint differs from the ledger's header), and rewrites the
-ledger. Counts come from each query's initial (pre-AQE) plan, lint
-hits from the plan that executed; the six rules, the plan walker and
-``refresh`` live in ``hetnetdb_spark/plans/audit.py``. A second run
-changes nothing.
+new pure query and every query whose adjudicated rules differ from
+those its row recorded when it was walked (all of them when the
+pyspark version or the rules' fingerprint differs from the ledger's
+header), and rewrites the ledger. Counts come from each query's
+initial (pre-AQE) plan, lint hits from the plan that executed; the
+six rules, the plan walker and ``refresh`` live in
+``hetnetdb_spark/plans/audit.py``. A second run changes nothing.
 
 Exit 1 on any lint hit without an adjudication at the code's current
 fingerprint: a new hit, or an adjudication whose code changed since
@@ -19,6 +20,11 @@ add ``{"<rule>": {"reason": "...", "fingerprint": ""}}`` under the
 query name (or the ``relpath:function`` collect site) in the ledger's
 ``adjudications`` and run the tool again: it stamps the fingerprint.
 Commit the ledger diff.
+
+A re-walked query's adjudication that guarded no hit in that walk is
+printed as ``STALE <query> — <rule>`` and kept; it does not fail the
+run (a hit can come and go with AQE's run-time sizes). Delete such an
+adjudication by hand once forced full re-walks keep showing it stale.
 """
 
 from __future__ import annotations
@@ -38,14 +44,15 @@ def main() -> int:
     ledger = audit.load_ledger()
     spark = get_spark("plan-lint")
     spark.sparkContext.setLogLevel("ERROR")
-    fresh, changes, flags = audit.refresh(spark, ledger)
+    fresh, changes, flags, stale = audit.refresh(spark, ledger)
     audit.write_ledger(fresh)
-    for line in changes + flags:
+    for line in changes + stale + flags:
         print(line)
     n_judged = sum(len(rules) for rules in fresh["adjudications"].values())
     print(
         f"\n{len(fresh['queries'])} pure queries at {fresh['sf_dir']}: "
-        f"{len(changes)} with changed counts, {n_judged} adjudications, "
+        f"{len(changes)} with changed counts, {n_judged} adjudications "
+        f"({len(stale)} stale), "
         f"{len(flags)} FLAGGED; {audit.LEDGER.name} rewritten"
     )
     return 1 if flags else 0

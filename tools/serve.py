@@ -27,6 +27,19 @@ LIMIT pushed into the plan (the cap changes what is FETCHED, not
 just what is printed): an interactive endpoint must never become an
 accidental full-table driver collect.
 
+The host answers before its catalog is ready. `serve` starts
+``catalog.register_views`` (CREATE + ANALYZE of every base table, the
+longest part of start-up) on one background thread and returns at
+once. Routes that read or write the catalog (``GET /health``,
+``GET /tables``, ``POST /query``, ``POST /tables/<name>``) wait until
+registration has finished, so they answer exactly as if it had run
+first, or 500 with its error if it failed. ``POST /run/<name>`` and
+``GET /queries`` never wait: registry queries read parquet files, and
+the few that need catalog tables register them themselves (the
+registration lock in ``catalog`` serializes them with the background
+thread). An impure run still waits, because the background thread
+holds the shared side of the session lock.
+
 Usage:
     python tools/serve.py [--port 8765] [--sf-dir /root/testdata/sf0.001]
     python tools/serve.py --self-test   # ephemeral port, scripted tour
@@ -157,18 +170,53 @@ class _RWLock:
             self._cond.notify_all()
 
 
+class _Registration:
+    """``catalog.register_views`` running on one background thread.
+
+    The thread holds the session lock's shared side until it is done:
+    registration calls ``configure()`` and writes the global catalog,
+    so an impure run (which flips session confs) must not interleave
+    with it, while pure runs may. ``wait`` blocks until registration
+    has ended; ``error`` is then what it raised, or None.
+    """
+
+    def __init__(self, spark, sf_dir: str, lock: _RWLock) -> None:
+        from hetnetdb_spark.catalog import register_views
+
+        self.error: BaseException | None = None
+        self._done = threading.Event()
+        # Taken here, before any request can arrive, so no impure run
+        # slips in ahead of the registration.
+        lock.acquire_shared()
+
+        def run() -> None:
+            try:
+                register_views(spark, sf_dir)
+            except BaseException as exc:  # noqa: BLE001 — answered per request
+                self.error = exc
+            finally:
+                lock.release_shared()
+                self._done.set()
+
+        threading.Thread(target=run, name="register-views", daemon=True).start()
+
+    def wait(self) -> BaseException | None:
+        self._done.wait()
+        return self.error
+
+
 def _build_app(sf_dir: str):
-    """Create the resident session + catalog; return
-    (spark, registry, lock) where lock is the session _RWLock."""
+    """Create the resident session and start registering the catalog
+    in the background; return (spark, registry, lock, registration)
+    where lock is the session _RWLock."""
     from hetnetdb_spark import registry
-    from hetnetdb_spark.catalog import register_views
     from hetnetdb_spark.session import get_spark
 
     spark = get_spark("hetnetdb-serve")
     spark.sparkContext.setLogLevel("ERROR")
     registry.load_all()
-    register_views(spark, sf_dir)
-    return spark, registry, _RWLock()
+    lock = _RWLock()
+    return spark, registry, lock, _Registration(spark, sf_dir, lock)
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -176,6 +224,7 @@ class _Handler(BaseHTTPRequestHandler):
     registry = None
     sf_dir = None
     lock: _RWLock = None
+    catalog: _Registration = None
 
     # -- plumbing ---------------------------------------------------------
 
@@ -203,11 +252,21 @@ class _Handler(BaseHTTPRequestHandler):
         rows = rows[:ROW_CAP]
         return {"rows": rows, "n": len(rows), "truncated": truncated}
 
+    def _catalog_ready(self) -> bool:
+        """Wait until the catalog is registered; if registration
+        failed, answer 500 with its error and return False."""
+        error = self.catalog.wait()
+        if error is not None:
+            self._send(500, {"error": f"catalog registration failed: {error}"[:500]})
+        return error is None
+
     # -- routes -----------------------------------------------------------
 
     def do_GET(self):
         try:
             if self.path == "/health":
+                if not self._catalog_ready():
+                    return
                 self.lock.acquire_shared()
                 try:
                     n = len(self.spark.catalog.listTables())
@@ -215,6 +274,8 @@ class _Handler(BaseHTTPRequestHandler):
                     self.lock.release_shared()
                 self._send(200, {"status": "ok", "tables": n})
             elif self.path == "/tables":
+                if not self._catalog_ready():
+                    return
                 self.lock.acquire_shared()
                 try:
                     names = [t.name for t in self.spark.catalog.listTables()]
@@ -238,6 +299,8 @@ class _Handler(BaseHTTPRequestHandler):
                     sql = raw
                 if not sql.strip():
                     self._send(400, {"error": "empty SQL"})
+                    return
+                if not self._catalog_ready():
                     return
                 # Ad-hoc SQL reads global state (views + confs) but
                 # never flips it — shared side, full interleaving.
@@ -276,6 +339,8 @@ class _Handler(BaseHTTPRequestHandler):
                 os.makedirs(SCRATCH, exist_ok=True)
                 csv_path = os.path.join(SCRATCH, f"upload_{name}.csv")
                 body = self._body()
+                if not self._catalog_ready():
+                    return
                 # Temp-view replace is a global-catalog write: exclusive.
                 self.lock.acquire_exclusive()
                 try:
@@ -302,11 +367,12 @@ class _Handler(BaseHTTPRequestHandler):
 
 
 def serve(sf_dir: str, port: int) -> ThreadingHTTPServer:
-    spark, registry, lock = _build_app(sf_dir)
+    spark, registry, lock, catalog = _build_app(sf_dir)
     _Handler.spark = spark
     _Handler.registry = registry
     _Handler.sf_dir = sf_dir
     _Handler.lock = lock
+    _Handler.catalog = catalog
     httpd = ThreadingHTTPServer(("127.0.0.1", port), _Handler)
     return httpd
 
