@@ -10,18 +10,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from hetnetdb_spark import registry
-from hetnetdb_spark.catalog import register_views
+from hetnetdb_spark.catalog import register_named
 
 
 def sql(spark: SparkSession, sf_dir: str, statement: str) -> DataFrame:
     """Run an arbitrary ANSI-SQL statement against the catalog.
 
-    All base tables from ``sf_dir`` are registered (as ANALYZEd
-    external parquet catalog tables — CBO join reordering sees row
-    and size stats) before the statement parses. The returned
-    DataFrame is lazy; Catalyst/AQE plan it like any API-built
-    query."""
-    register_views(spark, sf_dir)
+    The base tables from ``sf_dir`` that the statement names, or all
+    of them when it names none, are registered (as ANALYZEd external
+    parquet catalog tables — CBO join reordering sees row and size
+    stats) before the statement parses; a table already registered at
+    ``sf_dir`` costs nothing (``catalog.register_named``). The
+    returned DataFrame is lazy; Catalyst/AQE plan it like any
+    API-built query."""
+    register_named(spark, sf_dir, statement)
     return spark.sql(statement)
 
 
@@ -71,8 +73,13 @@ def ingest_csv(
     `table_name`, return the DataFrame.
 
     Registered as a temp view (session-scoped, like the reference's
-    per-server tables), so it composes with :func:`sql` — which
-    re-registers the parquet catalog but never drops temp views.
+    per-server tables), so it composes with :func:`sql`. A view named
+    after a base table shadows that table; register the table first
+    (``catalog.register_views``), or the next statement naming it
+    drops the view to register the table (``tools/serve.py``'s upload
+    route does this). ``events`` is the exception: any registration
+    of it replaces the view.
+
     For durable, stats-backed tables, write parquet and go through
     `catalog.register_views` instead; CSV is an ingest format, not a
     storage layout (no pushdown, no row-group pruning, full-file

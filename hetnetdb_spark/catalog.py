@@ -13,7 +13,9 @@ loop.
 from __future__ import annotations
 
 import os
+import re
 import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,11 +127,18 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFram
 _BOUND_SF: dict[tuple[str, str], str] = {}
 
 #: Held for the body of `register_views`. Two callers that both see a
-#: table unbound (the serve host's background registration and a query
+#: table unbound (two statements naming it, or a statement and a query
 #: that registers its own tables) would otherwise both DROP/CREATE it;
 #: serialized, the second finds it in `_BOUND_SF` and skips. Reentrant
 #: so a caller already inside may register again.
 _REGISTER_LOCK = threading.RLock()
+
+#: A base table's name as a whole word, in any case.
+_NAMED = re.compile(rf"\b({'|'.join(TABLE_NAMES)})\b", re.IGNORECASE)
+
+#: ``applicationId`` per SparkContext, read once: `register_named`'s
+#: bound check must not cross Py4J.
+_APP_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _catalog_table_location(spark: SparkSession, name: str) -> str | None:
@@ -207,6 +216,37 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
             else:
                 spark.sql(f"ANALYZE TABLE {n} COMPUTE STATISTICS")
             _BOUND_SF[key] = sf_dir
+
+
+def named_tables(text: str) -> tuple[str, ...]:
+    """The base tables whose name appears in *text* as a whole word,
+    in any case, in ``TABLE_NAMES`` order."""
+    found = {m.lower() for m in _NAMED.findall(text)}
+    return tuple(n for n in TABLE_NAMES if n in found)
+
+
+def register_named(spark: SparkSession, sf_dir: str, text: str) -> None:
+    """Register the base tables a SQL statement names, when it names
+    them: `register_views` over ``named_tables(text)``, or over every
+    table when *text* names none (``SHOW TABLES``, a statement over
+    uploaded views), as ``register_views``' own default does.
+
+    A base table cannot be read without its name appearing in the
+    text, so no table the statement reads is missed; a name inside a
+    comment or a literal only costs a registration. When every named
+    table is already bound to *sf_dir* this makes no Py4J call, so a
+    statement over registered tables pays nothing for it. ``events``
+    is a temp view and never bound: a statement naming it re-creates
+    it from `load`, as ``register_views`` always does.
+    """
+    names = named_tables(text)
+    sc = spark.sparkContext
+    app = _APP_IDS.get(sc)
+    if app is None:
+        app = _APP_IDS[sc] = sc.applicationId
+    if all(_BOUND_SF.get((app, n)) == sf_dir for n in names or TABLE_NAMES):
+        return
+    register_views(spark, sf_dir, *names)
 
 
 def spread(df: DataFrame, key: str = "doc_id") -> DataFrame:

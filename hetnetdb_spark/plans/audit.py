@@ -1,4 +1,4 @@
-"""Plan auditing: one walker over executed plans, the 100 TB-posture
+"""Plan auditing: one walker over physical plans, the 100 TB-posture
 lint rules, and the plan ledger.
 
 PLANS.md documents the plan each query should produce; this module
@@ -8,9 +8,10 @@ of silently costing a factor at scale.
 
 - ``execute`` runs a DataFrame through its own QueryExecution and
   returns the root of the plan that ran; ``walk`` yields its nodes,
-  descending through AQE query stages. ``shuffle_exchange_outputs``,
-  ``profile`` (``api.profile``, ``tools/pipeline_demo.py``) and the
-  lint rules read plans only through these two.
+  descending through AQE query stages. ``shuffle_exchange_outputs``
+  and ``profile`` (``api.profile``, ``tools/pipeline_demo.py``) read
+  executed plans only through these two; the lint rules and the
+  ledger counts walk initial plans with ``walk``.
 - The string helpers (``executed_plan``, ``shuffle_exchange_count``,
   ...) serve the printed-plan pins in ``tests/test_plans.py``.
 - ``PLAN_LEDGER.json`` pins every pure query's plan shape and the
@@ -18,9 +19,10 @@ of silently costing a factor at scale.
   (``hetnetdb_spark/fingerprint.py``). ``python tools/plan_lint.py``
   refreshes it; ``refresh`` is the shared core.
 
-The six rules. Rules 1-4 and 6 run over each pure query's executed
-(post-AQE) plan; rule 5 is a static source scan, so it also covers
-the impure and streaming queries the plan walk cannot execute. A hit
+The six rules. Rules 1-4 and 6 run over each pure query's initial
+(pre-AQE) plan, which is planned but not run; rule 5 is a static
+source scan, so it also covers the impure and streaming queries the
+plan walk cannot build. A hit
 is not automatically a bug (broadcasting a vocabulary-bounded
 aggregate of an exploded relation is the right plan), but every hit
 needs an adjudication: a reason in the ledger, judged against the
@@ -325,7 +327,7 @@ def _unbounded_fact_scans(node, join_seen: bool = False, depth: int = 0) -> set[
 
 
 def lint_plan(root) -> dict[str, int]:
-    """Per-rule hit counts of rules 1-4 and 6 over one executed plan."""
+    """Per-rule hit counts of rules 1-4 and 6 over one physical plan."""
     hits = {rule: 0 for rule in RULES if rule != "collect"} | {"accessor_error": 0}
     for node, _ in walk(root):
         name = node.nodeName()
@@ -425,20 +427,21 @@ def plan_counts(root) -> dict[str, int]:
 
 
 def audit(df: DataFrame) -> tuple[dict[str, int], dict[str, int]]:
-    """Execute ``df``; return its ledger counts and its lint hits.
+    """Plan ``df`` without running it; return its ledger counts and its
+    lint hits, both from the pre-AQE initial plan.
 
-    Counts come from the pre-AQE initial plan, which depends on the
-    code, the table statistics and the session, not on the sizes AQE
-    measures while running (l73's rule-6 hit comes and goes with
-    those). Hits come from the plan that executed, as AQE's
-    re-planning is what ships bytes to the driver."""
-    hits = lint_plan(execute(df))
+    That plan depends on the code, the table statistics and the
+    session, not on the sizes AQE measures while running, so an
+    unchanged query audits the same every time. It is also the plan
+    rules 1 and 6 guard: they catch broadcasts sized from estimates,
+    while a broadcast AQE converts at run time is sized from measured
+    bytes, which at scale are too large to broadcast."""
     jplan = df._jdf.queryExecution().executedPlan()
     try:
         initial = jplan.initialPlan()
-    except Py4JError:  # non-adaptive plan: nothing was re-planned
+    except Py4JError:  # non-adaptive plan: nothing will be re-planned
         initial = jplan
-    return plan_counts(initial), hits
+    return plan_counts(initial), lint_plan(initial)
 
 
 def header(sf_dir: str) -> dict[str, str]:
@@ -483,10 +486,9 @@ def refresh(spark: SparkSession, ledger: dict) -> tuple[dict, list[str], list[st
     ``flags`` names each lint hit (rule 5 over the whole package, the
     plan rules over the re-walked queries) left without an
     adjudication, saying which adjudications re-opened, and each query
-    that failed to execute. ``stale`` names each adjudication of a
-    re-walked query that guarded no hit in that walk; it is kept, as a
-    hit may come and go with AQE's run-time sizes (l59's rule 1, l73's
-    rule 6)."""
+    that failed to build or plan. ``stale`` names each adjudication of a
+    re-walked query that guarded no hit in that walk; it is kept until
+    deleted by hand."""
     sf_dir = ledger["sf_dir"]
     old_rows = ledger.get("queries", {})
     judged = ledger.get("adjudications", {})

@@ -97,3 +97,16 @@ def test_two_bases_never_share_a_cache_dir(tmp_path):
     dirs = {grown.corpus_dir(b, FACTOR, "documents") for b in (SF_DIR, str(twin), other)}
     assert len(dirs) == 3
     assert grown.corpus(SF_DIR, 1, "verbatim") == SF_DIR
+
+
+def test_stream_slope_corpora_are_keyed_by_the_base_path(tmp_path):
+    """tools/stream_state_slope.py keys its corpus by the base's real
+    path, so a base named like another (perfbench's inputs are all
+    named ``data``) never reuses the other's corpus."""
+    import stream_state_slope
+
+    a, b = tmp_path / "a" / "sf0.1", tmp_path / "b" / "sf0.1"
+    dirs = {stream_state_slope.corpus_dir(str(base), 10) for base in (a, b)}
+    assert len(dirs) == 2
+    assert stream_state_slope.corpus_dir(str(a), 10) != grown.corpus_dir(str(a), 10, "verbatim")
+

@@ -1511,3 +1511,24 @@ def test_plan_ledger_reports_an_added_shuffle(spark, monkeypatch):
     before = ledger["queries"][name]["shuffles"]
     _, changes, _, _ = audit.refresh(spark, ledger)
     assert changes == [f"{name}: shuffles {before} -> {before + 1}"]
+
+
+def test_audit_plans_without_running(spark):
+    """``audit`` reads the initial plan only: auditing an already-built
+    query starts no Spark job, and two audits of a query whose run-time
+    sizes once decided its hit (l59's rule 1) agree."""
+    sc = spark.sparkContext
+    df = registry.QUERIES["q1_pricing_summary"](spark, SF_DIR)
+    gid = "test-audit-q1"
+    sc.setJobGroup(gid, "audit")
+    try:
+        audit.audit(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+
+    sf_dir = audit.load_ledger()["sf_dir"]
+    name = "l59_minhash_index_probe"
+    first, second = (audit.audit(registry.QUERIES[name](spark, sf_dir))[1] for _ in range(2))
+    assert first == second

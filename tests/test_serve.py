@@ -267,18 +267,29 @@ def test_concurrent_impure_and_pure_http(server, spark):
     assert spark.conf.get("spark.sql.session.timeZone") == before_tz == "UTC"
 
 
-# -- catalog registration in the background ---------------------------------
+# -- catalog registration: each request registers what it names ------------
+
+
+def test_named_tables_match_whole_words():
+    from hetnetdb_spark.catalog import named_tables
+
+    assert named_tables("SELECT * FROM Orders JOIN NATION") == ("nation", "orders")
+    assert named_tables("SELECT l_orderkey FROM orders_x") == ()
+    assert named_tables("SELECT COUNT(*) FROM `region`") == ("region",)
+    assert named_tables("SHOW TABLES") == ()
 
 
 @pytest.fixture
 def start_server(spark, monkeypatch):
-    """Start a server whose ``register_views`` is *stand_in*. The
-    handler's class state is put back afterwards, so the module's
-    shared server keeps answering."""
+    """Start a fresh host, no table bound, whose ``register_views`` is
+    *stand_in*. The handler's class state is put back afterwards, so
+    the module's shared server keeps answering; forgetting the
+    bindings only makes the next registration re-check each table."""
     from hetnetdb_spark import catalog
 
-    for attr in ("spark", "registry", "sf_dir", "lock", "catalog"):
+    for attr in ("spark", "registry", "sf_dir", "lock"):
         monkeypatch.setattr(serve_mod._Handler, attr, getattr(serve_mod._Handler, attr))
+    catalog._BOUND_SF.clear()
     servers = []
 
     def start(stand_in):
@@ -293,89 +304,107 @@ def start_server(spark, monkeypatch):
         httpd.shutdown()
 
 
-def _gated_calls(base: str) -> dict[str, tuple]:
-    """One request to each route that waits for the catalog."""
-    return {
-        "health": ("GET", base + "/health", None),
-        "tables": ("GET", base + "/tables", None),
-        "query": (
-            "POST",
-            base + "/query",
-            b"SELECT COUNT(*) AS n FROM nation JOIN region ON n_regionkey = r_regionkey",
-        ),
-        "upload": ("POST", base + "/tables/bg_upload", b"city,pop\nparis,2100000\nlyon,520000\n"),
-    }
-
-
-def test_run_answers_while_catalog_registers(start_server):
-    """A named-query run and ``/queries`` answer while registration is
-    still blocked; the catalog routes answer only once it is released,
-    with the same payloads as a server whose catalog was ready."""
+@pytest.fixture
+def recorded(start_server):
+    """A fresh host whose registrations are recorded, then run: yields
+    (base url, calls), one tuple of table names per call (() = every
+    table)."""
     from hetnetdb_spark.catalog import register_views
 
-    release = threading.Event()
+    calls: list[tuple[str, ...]] = []
 
-    def blocked(spark, sf_dir, *names):
-        assert release.wait(timeout=120), "registration never released"
+    def recording(spark, sf_dir, *names):
+        calls.append(names)
         register_views(spark, sf_dir, *names)
 
-    base = start_server(blocked)
-    answers: dict[str, tuple] = {}
-    try:
-        code, body = _call("POST", base + "/run/q1_pricing_summary")
-        assert code == 200 and body["n"] > 0
-        assert _call("GET", base + "/queries")[0] == 200
+    return start_server(recording), calls
 
-        def client(key, method, url, data):
-            result = _call(method, url, data)
-            answers[key] = (time.monotonic(), result)
 
-        threads = [
-            threading.Thread(target=client, args=(key, *call))
-            for key, call in _gated_calls(base).items()
-        ]
-        for t in threads:
-            t.start()
-        time.sleep(0.5)
-        assert answers == {}, f"answered before the catalog was ready: {answers}"
-        released_at = time.monotonic()
-        release.set()
-        for t in threads:
-            t.join(timeout=120)
-    finally:
-        release.set()
-    assert sorted(answers) == ["health", "query", "tables", "upload"]
-    assert all(at >= released_at for at, _ in answers.values())
-    code, body = answers["health"][1]
+_JOIN = b"SELECT COUNT(*) AS n FROM nation JOIN region ON n_regionkey = r_regionkey"
+
+
+def test_runs_register_nothing(recorded):
+    """Named runs, impure ones too, answer on a fresh host without
+    registering a table."""
+    base, calls = recorded
+    code, body = _call("POST", base + "/run/q1_pricing_summary")
+    assert code == 200 and body["n"] > 0
+    code, body = _call("POST", base + "/run/s06_partitioned_sink")
+    assert code == 200 and body["n"] > 0
+    assert calls == []
+
+
+def test_query_registers_the_tables_it_names_once(recorded):
+    base, calls = recorded
+    assert _call("POST", base + "/query", _JOIN) == (
+        200, {"rows": [{"n": 25}], "n": 1, "truncated": False}
+    )
+    assert [set(c) for c in calls] == [{"nation", "region"}]
+    assert _call("POST", base + "/query", _JOIN)[0] == 200
+    assert len(calls) == 1, calls
+
+
+def test_query_naming_no_base_table_registers_every_table(recorded):
+    base, calls = recorded
+    csv = b"city,pop\nparis,2100000\nlyon,520000\n"
+    assert _call("POST", base + "/tables/cities_r", csv)[0] == 201
+    assert calls == []
+    code, body = _call("POST", base + "/query", b"SELECT city FROM cities_r WHERE pop > 1000000")
+    assert code == 200 and body["rows"] == [{"city": "paris"}]
+    assert calls == [()]
+
+
+def test_health_and_tables_register_every_table(recorded):
+    base, calls = recorded
+    code, body = _call("GET", base + "/health")
     assert code == 200 and body["status"] == "ok" and body["tables"] >= 10
-    code, body = answers["tables"][1]
-    assert code == 200 and {"region", "nation", "lineitem"} <= set(body["tables"])
-    assert answers["query"][1] == (200, {"rows": [{"n": 25}], "n": 1, "truncated": False})
-    code, body = answers["upload"][1]
-    assert code == 201 and body["table"] == "bg_upload" and body["rows"] == 2
+    code, body = _call("GET", base + "/tables")
+    assert code == 200 and {"region", "nation", "lineitem", "documents"} <= set(body["tables"])
+    assert calls == [(), ()]
 
 
-def test_failed_registration_answers_500_on_catalog_routes(start_server):
-    """A registration that raises turns every catalog route into a 500
-    naming the error, instead of a hang or "table not found"; named
-    runs still answer."""
+def test_failed_registration_is_the_routes_error_answer(start_server):
+    """A registration that raises is the route's usual error answer
+    (500 on GET, 400 on POST) naming the error, never a hang or "table
+    not found"; named runs still answer."""
 
     def failing(spark, sf_dir, *names):
         raise RuntimeError("metastore unreachable")
 
     base = start_server(failing)
-    for key, (method, url, data) in _gated_calls(base).items():
-        code, body = _call(method, url, data)
-        assert code == 500, (key, code, body)
-        assert "metastore unreachable" in body["error"], (key, body)
+    for method, path, data, want in [
+        ("GET", "/health", None, 500),
+        ("GET", "/tables", None, 500),
+        ("POST", "/query", _JOIN, 400),
+        ("POST", "/tables/region", b"r_regionkey,r_name\n0,ATLANTIS\n", 400),
+    ]:
+        code, body = _call(method, base + path, data)
+        assert code == want, (path, code, body)
+        assert "metastore unreachable" in body["error"], (path, body)
     code, body = _call("POST", base + "/run/q1_pricing_summary")
     assert code == 200 and body["n"] > 0
 
 
+def test_upload_named_like_a_base_table_shadows_it(recorded, spark):
+    """An upload named ``region`` registers the table first, so the
+    next statement over ``region`` reads the upload instead of
+    dropping it to register the table."""
+    base, calls = recorded
+    try:
+        code, body = _call("POST", base + "/tables/region", b"r_regionkey,r_name\n0,ATLANTIS\n")
+        assert code == 201 and body["rows"] == 1
+        code, body = _call("POST", base + "/query", b"SELECT r_name FROM region")
+        assert code == 200 and body["rows"] == [{"r_name": "ATLANTIS"}]
+        assert calls == [("region",)]
+    finally:
+        spark.catalog.dropTempView("region")
+
+
 def test_concurrent_register_views_registers_once(spark, monkeypatch):
-    """Two threads registering the same unbound table at once (the
-    serve host's background thread and a query that registers its own
-    tables) both return, and the table is created and analyzed once."""
+    """Two threads registering the same unbound table at once (two
+    statements naming it, or a statement and a query that registers
+    its own tables) both return, and the table is created and analyzed
+    once."""
     from hetnetdb_spark import catalog
 
     key = (spark.sparkContext.applicationId, "supplier")

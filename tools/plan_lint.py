@@ -8,9 +8,9 @@ pure query whose fingerprint differs from its ledger row, plus every
 new pure query and every query whose adjudicated rules differ from
 those its row recorded when it was walked (all of them when the
 pyspark version or the rules' fingerprint differs from the ledger's
-header), and rewrites the ledger. Counts come from each query's
-initial (pre-AQE) plan, lint hits from the plan that executed; the
-six rules, the plan walker and ``refresh`` live in
+header), and rewrites the ledger. Counts and lint hits both come
+from each query's initial (pre-AQE) plan, which is planned but not
+run; the six rules, the plan walker and ``refresh`` live in
 ``hetnetdb_spark/plans/audit.py``. A second run changes nothing.
 
 Exit 1 on any lint hit without an adjudication at the code's current
@@ -23,8 +23,7 @@ Commit the ledger diff.
 
 A re-walked query's adjudication that guarded no hit in that walk is
 printed as ``STALE <query> — <rule>`` and kept; it does not fail the
-run (a hit can come and go with AQE's run-time sizes). Delete such an
-adjudication by hand once forced full re-walks keep showing it stale.
+run. Delete such an adjudication by hand: it guards nothing.
 """
 
 from __future__ import annotations

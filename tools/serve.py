@@ -27,18 +27,28 @@ LIMIT pushed into the plan (the cap changes what is FETCHED, not
 just what is printed): an interactive endpoint must never become an
 accidental full-table driver collect.
 
-The host answers before its catalog is ready. `serve` starts
-``catalog.register_views`` (CREATE + ANALYZE of every base table, the
-longest part of start-up) on one background thread and returns at
-once. Routes that read or write the catalog (``GET /health``,
-``GET /tables``, ``POST /query``, ``POST /tables/<name>``) wait until
-registration has finished, so they answer exactly as if it had run
-first, or 500 with its error if it failed. ``POST /run/<name>`` and
-``GET /queries`` never wait: registry queries read parquet files, and
-the few that need catalog tables register them themselves (the
-registration lock in ``catalog`` serializes them with the background
-thread). An impure run still waits, because the background thread
-holds the shared side of the session lock.
+Each route registers the base tables it reads, when it reads them
+(``catalog.register_views``: CREATE + ANALYZE once per table, free
+after that), so the host answers as soon as Spark is up:
+
+- ``POST /query`` registers the tables its statement names, or every
+  table when it names none (``api.sql``);
+- ``GET /health`` and ``GET /tables`` register every table before
+  listing them;
+- ``POST /tables/<name>`` registers the base table ``<name>`` first
+  when the upload bears a base table's name, so no later statement
+  drops the upload's view to register that table: the upload shadows
+  it. ``events`` is a temp view re-created by any registration of it,
+  so an upload named ``events`` lasts only until a statement names
+  ``events`` or a route registers every table;
+- ``POST /run/<name>`` and ``GET /queries`` register nothing: registry
+  queries read parquet files, and the few that need catalog tables
+  register them themselves.
+
+No request waits for tables it does not read: an impure run starts
+at once, and a statement over ``orders`` analyzes ``orders`` only.
+A failed registration is that request's error answer (500 on GET,
+400 on POST).
 
 Usage:
     python tools/serve.py [--port 8765] [--sf-dir /root/testdata/sf0.001]
@@ -54,6 +64,9 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from hetnetdb_spark import api, catalog  # noqa: E402
+from hetnetdb_spark.schemas import TABLE_NAMES  # noqa: E402
 
 ROW_CAP = 10_000
 
@@ -170,44 +183,8 @@ class _RWLock:
             self._cond.notify_all()
 
 
-class _Registration:
-    """``catalog.register_views`` running on one background thread.
-
-    The thread holds the session lock's shared side until it is done:
-    registration calls ``configure()`` and writes the global catalog,
-    so an impure run (which flips session confs) must not interleave
-    with it, while pure runs may. ``wait`` blocks until registration
-    has ended; ``error`` is then what it raised, or None.
-    """
-
-    def __init__(self, spark, sf_dir: str, lock: _RWLock) -> None:
-        from hetnetdb_spark.catalog import register_views
-
-        self.error: BaseException | None = None
-        self._done = threading.Event()
-        # Taken here, before any request can arrive, so no impure run
-        # slips in ahead of the registration.
-        lock.acquire_shared()
-
-        def run() -> None:
-            try:
-                register_views(spark, sf_dir)
-            except BaseException as exc:  # noqa: BLE001 — answered per request
-                self.error = exc
-            finally:
-                lock.release_shared()
-                self._done.set()
-
-        threading.Thread(target=run, name="register-views", daemon=True).start()
-
-    def wait(self) -> BaseException | None:
-        self._done.wait()
-        return self.error
-
-
 def _build_app(sf_dir: str):
-    """Create the resident session and start registering the catalog
-    in the background; return (spark, registry, lock, registration)
+    """Create the resident session; return (spark, registry, lock)
     where lock is the session _RWLock."""
     from hetnetdb_spark import registry
     from hetnetdb_spark.session import get_spark
@@ -215,8 +192,7 @@ def _build_app(sf_dir: str):
     spark = get_spark("hetnetdb-serve")
     spark.sparkContext.setLogLevel("ERROR")
     registry.load_all()
-    lock = _RWLock()
-    return spark, registry, lock, _Registration(spark, sf_dir, lock)
+    return spark, registry, _RWLock()
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -224,7 +200,6 @@ class _Handler(BaseHTTPRequestHandler):
     registry = None
     sf_dir = None
     lock: _RWLock = None
-    catalog: _Registration = None
 
     # -- plumbing ---------------------------------------------------------
 
@@ -252,36 +227,23 @@ class _Handler(BaseHTTPRequestHandler):
         rows = rows[:ROW_CAP]
         return {"rows": rows, "n": len(rows), "truncated": truncated}
 
-    def _catalog_ready(self) -> bool:
-        """Wait until the catalog is registered; if registration
-        failed, answer 500 with its error and return False."""
-        error = self.catalog.wait()
-        if error is not None:
-            self._send(500, {"error": f"catalog registration failed: {error}"[:500]})
-        return error is None
+    def _tables(self) -> list[str]:
+        """Register every base table, then list the catalog."""
+        self.lock.acquire_shared()
+        try:
+            catalog.register_views(self.spark, self.sf_dir)
+            return [t.name for t in self.spark.catalog.listTables()]
+        finally:
+            self.lock.release_shared()
 
     # -- routes -----------------------------------------------------------
 
     def do_GET(self):
         try:
             if self.path == "/health":
-                if not self._catalog_ready():
-                    return
-                self.lock.acquire_shared()
-                try:
-                    n = len(self.spark.catalog.listTables())
-                finally:
-                    self.lock.release_shared()
-                self._send(200, {"status": "ok", "tables": n})
+                self._send(200, {"status": "ok", "tables": len(self._tables())})
             elif self.path == "/tables":
-                if not self._catalog_ready():
-                    return
-                self.lock.acquire_shared()
-                try:
-                    names = [t.name for t in self.spark.catalog.listTables()]
-                finally:
-                    self.lock.release_shared()
-                self._send(200, {"tables": sorted(names)})
+                self._send(200, {"tables": sorted(self._tables())})
             elif self.path == "/queries":
                 self._send(200, {"queries": sorted(self.registry.QUERIES)})
             else:
@@ -300,13 +262,11 @@ class _Handler(BaseHTTPRequestHandler):
                 if not sql.strip():
                     self._send(400, {"error": "empty SQL"})
                     return
-                if not self._catalog_ready():
-                    return
                 # Ad-hoc SQL reads global state (views + confs) but
                 # never flips it — shared side, full interleaving.
                 self.lock.acquire_shared()
                 try:
-                    payload = self._df_payload(self.spark.sql(sql))
+                    payload = self._df_payload(api.sql(self.spark, self.sf_dir, sql))
                 finally:
                     self.lock.release_shared()
                 self._send(200, payload)
@@ -339,19 +299,14 @@ class _Handler(BaseHTTPRequestHandler):
                 os.makedirs(SCRATCH, exist_ok=True)
                 csv_path = os.path.join(SCRATCH, f"upload_{name}.csv")
                 body = self._body()
-                if not self._catalog_ready():
-                    return
                 # Temp-view replace is a global-catalog write: exclusive.
                 self.lock.acquire_exclusive()
                 try:
+                    if name in TABLE_NAMES:
+                        catalog.register_views(self.spark, self.sf_dir, name)
                     with open(csv_path, "wb") as fh:
                         fh.write(body)
-                    df = (
-                        self.spark.read.option("header", "true")
-                        .option("inferSchema", "true")
-                        .csv(csv_path)
-                    )
-                    df.createOrReplaceTempView(name)
+                    df = api.ingest_csv(self.spark, csv_path, name)
                     payload = {
                         "table": name,
                         "rows": df.count(),
@@ -367,12 +322,11 @@ class _Handler(BaseHTTPRequestHandler):
 
 
 def serve(sf_dir: str, port: int) -> ThreadingHTTPServer:
-    spark, registry, lock, catalog = _build_app(sf_dir)
+    spark, registry, lock = _build_app(sf_dir)
     _Handler.spark = spark
     _Handler.registry = registry
     _Handler.sf_dir = sf_dir
     _Handler.lock = lock
-    _Handler.catalog = catalog
     httpd = ThreadingHTTPServer(("127.0.0.1", port), _Handler)
     return httpd
 

@@ -65,8 +65,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+import grown  # tools/grown.py
 from hetnetdb_spark.scratch import SCRATCH as PID_SCRATCH
-from hetnetdb_spark.scratch import SCRATCH_ROOT
 from hetnetdb_spark.session import get_spark
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -100,6 +100,14 @@ def _pin_split_mtimes(corpus: str) -> None:
                 os.utime(os.path.join(split_dir, fname), (mtime, mtime))
 
 
+def corpus_dir(base: str, factor: int) -> str:
+    """Where ``build`` keeps the corpus grown from ``base``: keyed by
+    the base's real path, as ``grown`` keys its corpora, so a corpus
+    grown from one base never satisfies a request for another, even
+    one with the same directory name."""
+    return grown.corpus_dir(base, factor, "stream_slope")
+
+
 def build(spark, factor: int) -> str:
     """Materialize the shifted-replica events corpus for ``factor``:
     N_SPLITS time-ordered dirs of one parquet file each, every event
@@ -107,12 +115,7 @@ def build(spark, factor: int) -> str:
     the corpus dir. Splits are written SEQUENTIALLY so their file
     modification times ascend with their time ranges and the file
     stream source (oldest-first) replays the timeline in order."""
-    # Key the cache by BASE as well as factor: a corpus grown from
-    # sf0.01 must never satisfy a request for sf0.1 (the first run
-    # of this tool did exactly that — a smoke test at sf0.01 left a
-    # cached 1x corpus that silently became the sf0.1 baseline).
-    sf_tag = os.path.basename(BASE.rstrip("/")).replace(".", "_")
-    out = os.path.join(SCRATCH_ROOT, f"stream_slope_{sf_tag}_{factor}x")
+    out = corpus_dir(BASE, factor)
     if _complete(out):
         _pin_split_mtimes(out)  # pre-fix caches carry unpinned mtimes
         return out
