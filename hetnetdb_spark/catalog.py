@@ -15,7 +15,6 @@ from __future__ import annotations
 import os
 import re
 import threading
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
 from hetnetdb_spark.schemas import TABLE_NAMES
-from hetnetdb_spark.session import configure
+from hetnetdb_spark.session import app_id, configure
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -52,14 +51,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    # Self-configure: the events branch below depends on
-    # `nanosAsLong` being active at scan-plan time. Relying on a
-    # prior caller having run configure() made the first events
-    # load order-dependent (ts surfaces as TIMESTAMP_NTZ and the
-    # `div 1000` fails to resolve on a session that never passed
-    # through session.get_spark). Idempotent and conf-set is cheap.
+    # A session that never passed through session.get_spark (the
+    # driver's) is configured here: the events branch below depends on
+    # `nanosAsLong` being active at scan-plan time.
     configure(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = (app_id(spark), sf_dir, name)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
@@ -101,7 +97,7 @@ def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``timestamp_micros(... div 1000)`` to match oracle schemas.
     """
     configure(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, "events_raw")
+    key = (app_id(spark), sf_dir, "events_raw")
     cached = _TABLE_CACHE.get(key)
     if cached is None:
         cached = spark.read.parquet(table_path(sf_dir, "events"))
@@ -115,7 +111,6 @@ def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    configure(spark)
     return tuple(load(spark, sf_dir, n) for n in names)
 
 
@@ -135,11 +130,6 @@ _REGISTER_LOCK = threading.RLock()
 
 #: A base table's name as a whole word, in any case.
 _NAMED = re.compile(rf"\b({'|'.join(TABLE_NAMES)})\b", re.IGNORECASE)
-
-#: ``applicationId`` per SparkContext, read once: `register_named`'s
-#: bound check must not cross Py4J.
-_APP_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
 
 def _catalog_table_location(spark: SparkSession, name: str) -> str | None:
     if not spark.catalog.tableExists(name):
@@ -165,15 +155,9 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     path). A stale metastore entry pointing at another sf_dir is
     dropped and recreated.
 
-    CBO + join reordering are switched on here, and ``spark.conf.set``
-    makes that session-wide: every later DataFrame query in the
-    session is planned with CBO too, not only the SQL path. That is
-    harmless for the registry: with every table registered at sf0.01,
-    none of the 244 pure queries' initial physical plans differs
-    between CBO on and off (expression ids normalised;
-    ``tests/test_plans.py`` pins the 8 headline queries). Stats exist
-    only for these catalog tables, and the DataFrame path reads
-    parquet files, not the tables.
+    Registration changes no session setting. The statistics feed CBO
+    and join reordering, which ``session.SESSION_CONF`` turns on for
+    every session from its first configuration.
 
     One stats scan per table: ``ANALYZE ... FOR COLUMNS`` records the
     table's size and row count along with the column stats, so the
@@ -182,13 +166,11 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     """
     with _REGISTER_LOCK:
         configure(spark)
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
         for n in names or TABLE_NAMES:
             if n == "events":
                 load(spark, sf_dir, n).createOrReplaceTempView(n)
                 continue
-            key = (spark.sparkContext.applicationId, n)
+            key = (app_id(spark), n)
             if _BOUND_SF.get(key) == sf_dir:
                 continue
             path = table_path(sf_dir, n)
@@ -240,10 +222,7 @@ def register_named(spark: SparkSession, sf_dir: str, text: str) -> None:
     it from `load`, as ``register_views`` always does.
     """
     names = named_tables(text)
-    sc = spark.sparkContext
-    app = _APP_IDS.get(sc)
-    if app is None:
-        app = _APP_IDS[sc] = sc.applicationId
+    app = app_id(spark)
     if all(_BOUND_SF.get((app, n)) == sf_dir for n in names or TABLE_NAMES):
         return
     register_views(spark, sf_dir, *names)

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 from hetnetdb_spark.catalog import load_tables
 from hetnetdb_spark.expr import r6
 from hetnetdb_spark.registry import query
+from hetnetdb_spark.session import conf_scope
 
 # --------------------------------------------------------------------------
 # J4 — left outer join
@@ -338,19 +339,18 @@ def j11_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     application-side scan), so they are lowered — and the broadcast
     path disabled, as a 100 TB orders side could never broadcast —
     only while THIS query's plan is optimized and physically
-    planned; the session confs are restored before returning (the
-    plan pins its own optimized tree, so later actions reuse it).
+    planned, inside `session.conf_scope` (the plan pins its own
+    optimized tree, so later actions reuse it).
     """
     lineitem, orders = load_tables(spark, sf_dir, "lineitem", "orders")
-    confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
         df = (
             lineitem.join(
                 orders.filter(F.col("o_orderpriority") == "1-URGENT"),
@@ -377,12 +377,6 @@ def j11_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the scoped confs are in effect; both are cached on this
         # DataFrame's QueryExecution.
         df._jdf.queryExecution().executedPlan()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return df
 
 

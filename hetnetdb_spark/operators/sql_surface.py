@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from hetnetdb_spark.catalog import load_tables, register_views
 from hetnetdb_spark.registry import query
+from hetnetdb_spark.session import conf_scope
 
 # --------------------------------------------------------------------------
 # O10 — WITH RECURSIVE hierarchy rollup (identical SQL on both engines)
@@ -84,23 +85,16 @@ def o10_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     soon as the table outgrows it — the 10x slope run failed with
     RECURSION_ROW_LIMIT_EXCEEDED at 2M parts. The row limit is
     lifted for THIS query only: the conf is execution-time read, so
-    the recursion is materialized inside the override scope (the
-    rollup is <= depth rows — bounded at any SF) and the previous
-    limit is restored in a finally. Leaving `-1` on the shared
-    session would disable the runaway-recursion guard for every
-    later query in the same session (w20's recursive CTE included)."""
+    the recursion is materialized inside a `session.conf_scope` (the
+    rollup is <= depth rows — bounded at any SF), which restores the
+    previous limit. Leaving `-1` on the shared session would disable
+    the runaway-recursion guard for every later query in the same
+    session (w20's recursive CTE included)."""
     register_views(spark, sf_dir, "part")
-    prev = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    spark.conf.set("spark.sql.cteRecursionRowLimit", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.cteRecursionRowLimit": "-1"}):
         result = spark.sql(O10_SQL)
         rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.cteRecursionRowLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", prev)
+    return spark.createDataFrame(rows, result.schema)
 
 
 # --------------------------------------------------------------------------

@@ -34,6 +34,7 @@ from hetnetdb_spark.catalog import load_tables, spread
 from hetnetdb_spark.expr import dot, r6
 from hetnetdb_spark.registry import query
 from hetnetdb_spark.scratch import SCRATCH
+from hetnetdb_spark.session import app_id
 
 DIM = 64
 
@@ -228,7 +229,7 @@ def exact_pairs(spark: SparkSession, emb: DataFrame, tau: float) -> DataFrame:
     """
     import pandas as pd
 
-    key = (spark.sparkContext.applicationId, emb.semanticHash(), tau)
+    key = (app_id(spark), emb.semanticHash(), tau)
     cached = _PAIRS_CACHE.get(key)
     if cached is not None:
         return cached

@@ -89,7 +89,9 @@ def query(
 
             @functools.wraps(fn)
             def registered(spark: "SparkSession", sf_dir: str) -> "DataFrame":
-                key = (spark.sparkContext.applicationId, sf_dir, name)
+                from hetnetdb_spark.session import app_id  # noqa: PLC0415
+
+                key = (app_id(spark), sf_dir, name)
                 df = _PLAN_CACHE.get(key)
                 if df is None:
                     df = fn(spark, sf_dir)

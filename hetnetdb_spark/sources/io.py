@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from hetnetdb_spark.catalog import load_tables, register_views
 from hetnetdb_spark.expr import r6
 from hetnetdb_spark.registry import query
+from hetnetdb_spark.session import conf_scope
 
 # Per-process scratch root (see hetnetdb_spark/scratch.py for the
 # concurrency contract); re-exported here because tests and tools
@@ -528,15 +529,10 @@ def s14_partition_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         changed_year.withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000)
     )
 
-    key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         # mode("overwrite") + dynamic: only partitions present in
         # `changes` (o_year=2001) are replaced.
         changes.write.mode("overwrite").partitionBy("o_year").parquet(path)
-    finally:
-        spark.conf.set(key, old) if old is not None else spark.conf.unset(key)
 
     back = spark.read.parquet(path)
     return back.groupBy("o_year").agg(
@@ -1970,10 +1966,7 @@ def s39_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFram
         def reader(self, schema):
             return _PushReader(self.options)
 
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "true")
-    try:
+    with conf_scope(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
         spark.dataSource.register(_PushFeed)
         feed = (
             spark.read.format("hetnetdb_push_feed")
@@ -1999,11 +1992,6 @@ def s39_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFram
             "part_id int, n_rows bigint, min_id bigint, max_id bigint, "
             "total_cents bigint, bounds_pushed bigint",
         ).orderBy("part_id")
-    finally:
-        if old is not None:
-            spark.conf.set(conf_key, old)
-        else:
-            spark.conf.unset(conf_key)
 
 
 # --------------------------------------------------------------------------

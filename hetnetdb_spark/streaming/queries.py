@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from hetnetdb_spark.catalog import load_events_raw, load_tables, table_path
 from hetnetdb_spark.registry import query
+from hetnetdb_spark.session import app_id, conf_scope
 
 from hetnetdb_spark.scratch import SCRATCH  # per-process; see scratch.py
 
@@ -726,10 +727,10 @@ def _ship_miniproto(spark: SparkSession) -> None:
     # addPyFile is idempotent per path; guard per-application anyway
     # to keep the driver log clean on re-invocation.
     shipped = getattr(sys.modules[__name__], "_MINIPROTO_SHIPPED", set())
-    app_id = spark.sparkContext.applicationId
-    if app_id not in shipped:
+    app = app_id(spark)
+    if app not in shipped:
         spark.sparkContext.addPyFile(zip_path)
-        shipped.add(app_id)
+        shipped.add(app)
         sys.modules[__name__]._MINIPROTO_SHIPPED = shipped
     # transformWithState's DRIVER-side python worker (state-schema
     # validation) builds its sys.path from PYTHONPATH only — it never
@@ -801,34 +802,22 @@ def _shared_event_splits(events: DataFrame, sf_dir: str) -> str:
 
 
 def _rocksdb_provider(spark: SparkSession):
-    """Scoped RocksDB state-store provider (context manager).
+    """Scoped RocksDB state-store provider (a `session.conf_scope`).
 
     transformWithState keeps each state variable in its own column
     family, which HDFSBackedStateStoreProvider cannot do — RocksDB
     is a hard requirement of the operator. The conf is read at
-    stream START, so set/restore around one query keeps the rest of
+    stream START, so a scope around one query keeps the rest of
     the suite on the default provider (both backends stay
     exercised)."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _scope():
-        key = "spark.sql.streaming.stateStore.providerClass"
-        rocksdb = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-        old = spark.conf.get(key, None)
-        spark.conf.set(key, rocksdb)
-        try:
-            yield
-        finally:
-            if old is not None:
-                spark.conf.set(key, old)
-            else:
-                spark.conf.unset(key)
-
-    return _scope()
+    return conf_scope(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+            )
+        },
+    )
 
 
 def _query_if_protobuf(name: str, oracle: str):

@@ -273,16 +273,9 @@ def test_t13_rocksdb_provider_engages(spark):
     from pyspark.sql import functions as F
 
     from hetnetdb_spark.catalog import table_path
-    from hetnetdb_spark.streaming.queries import _events_stream
+    from hetnetdb_spark.streaming.queries import _events_stream, _rocksdb_provider
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, rocksdb)
-    try:
+    with _rocksdb_provider(spark):
         stream = _events_stream(spark, table_path(SF_DIR, "events"))
         agg = stream.groupBy(
             F.window("ts", "1 hour"), "event_type"
@@ -300,5 +293,3 @@ def test_t13_rocksdb_provider_engages(spark):
         assert ops, progress
         metrics = ops[0].get("customMetrics", {})
         assert any(k.startswith("rocksdb") for k in metrics), metrics
-    finally:
-        spark.conf.set(key, old) if old is not None else spark.conf.unset(key)

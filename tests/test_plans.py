@@ -24,6 +24,7 @@ from hetnetdb_spark.plans.audit import (
     shuffle_exchange_count,
     shuffle_exchange_outputs,
 )
+from hetnetdb_spark.session import conf_scope
 
 
 def assert_no_exchange_carries(df, forbidden: set[str]) -> None:
@@ -246,31 +247,22 @@ def test_lsh_band_exchanges_carry_no_payload(spark):
         ("l04_simjoin_lsh", ("emb", "embedding")),
         ("l02_minhash_neardup", ("_sh", "sh#")),
     ]:
-        # Build once under normal conf (configure() re-applies the
-        # session broadcast threshold at build time), THEN disable
-        # broadcast joins for the execution: at sf0.001 AQE otherwise
-        # broadcasts every join, leaving zero gated exchanges and a
-        # vacuous invariant (ADVICE r10). With broadcasts off, the
-        # band join materializes as the same shuffle it becomes at
-        # corpus scale, and the payload check actually bites in CI.
+        # Build once under normal conf, THEN disable broadcast joins
+        # for the execution (the cached plan is re-planned per
+        # invocation): at sf0.001 AQE otherwise broadcasts every
+        # join, leaving zero gated exchanges and a vacuous invariant
+        # (ADVICE r10). With broadcasts off, the band join
+        # materializes as the same shuffle it becomes at corpus
+        # scale, and the payload check actually bites in CI.
         registry.QUERIES[name](spark, SF_DIR)
-        saved = {
-            k: spark.conf.get(k, None)
-            for k in (
-                "spark.sql.autoBroadcastJoinThreshold",
-                "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            )
-        }
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        with conf_scope(
+            spark,
+            {
+                "spark.sql.autoBroadcastJoinThreshold": "-1",
+                "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+            },
+        ):
             plan = executed_plan(registry.QUERIES[name](spark, SF_DIR))
-        finally:
-            for k, v in saved.items():
-                if v is not None:
-                    spark.conf.set(k, v)
-                else:
-                    spark.conf.unset(k)
         exchanges = [
             line
             for line in plan.splitlines()
@@ -909,15 +901,8 @@ def test_o10_recursion_is_engine_looped(spark):
     from hetnetdb_spark.operators.sql_surface import O10_SQL
 
     register_views(spark, SF_DIR, "part")
-    prev = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    spark.conf.set("spark.sql.cteRecursionRowLimit", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.cteRecursionRowLimit": "-1"}):
         plan = executed_plan(spark.sql(O10_SQL))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.cteRecursionRowLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", prev)
     assert "UnionLoop" in plan, plan
     assert "sum(cast(price" in plan and "as decimal(18,6)" in plan, plan
     # the registered query must leave the session guard restored
@@ -1429,10 +1414,11 @@ def test_s17_profile_has_no_expand(spark):
 
 
 def test_cbo_leaves_headline_initial_plans_unchanged(spark):
-    """``register_views`` switches CBO and join reordering on for the
-    whole session, so every later DataFrame query is planned with
-    them. With every table registered, the 8 headline queries' initial
-    (pre-AQE) physical plans must be the same with CBO on and off."""
+    """``session.SESSION_CONF`` turns CBO and join reordering on for
+    every session, so every DataFrame query is planned with them,
+    though only the SQL path's catalog tables carry statistics. With
+    every table registered, the 8 headline queries' initial (pre-AQE)
+    physical plans must be the same with CBO on and off."""
     import re
 
     from py4j.protocol import Py4JError
@@ -1442,26 +1428,21 @@ def test_cbo_leaves_headline_initial_plans_unchanged(spark):
 
     register_views(spark, SF_DIR)
     keys = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    before = {k: spark.conf.get(k) for k in keys}
 
     def initial_plans(flag: str) -> dict[str, str]:
-        for k in keys:
-            spark.conf.set(k, flag)
         out = {}
-        for name in HEADLINE:
-            plan = registry.QUERIES[name](spark, SF_DIR)._jdf.queryExecution().executedPlan()
-            try:
-                plan = plan.initialPlan()
-            except Py4JError:  # not adaptive: the plan is the initial one
-                pass
-            out[name] = re.sub(r"#\d+|plan_id=\d+", "#", plan.toString())
+        with conf_scope(spark, dict.fromkeys(keys, flag)):
+            for name in HEADLINE:
+                qe = registry.QUERIES[name](spark, SF_DIR)._jdf.queryExecution()
+                plan = qe.executedPlan()
+                try:
+                    plan = plan.initialPlan()
+                except Py4JError:  # not adaptive: the plan is the initial one
+                    pass
+                out[name] = re.sub(r"#\d+|plan_id=\d+", "#", plan.toString())
         return out
 
-    try:
-        on, off = initial_plans("true"), initial_plans("false")
-    finally:
-        for k, v in before.items():
-            spark.conf.set(k, v)
+    on, off = initial_plans("true"), initial_plans("false")
     assert sorted(on) == sorted(HEADLINE)
     changed = [n for n in HEADLINE if on[n] != off[n]]
     assert not changed, "\n\n".join(f"{n}\nCBO on:\n{on[n]}\nCBO off:\n{off[n]}" for n in changed)

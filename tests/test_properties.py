@@ -240,6 +240,7 @@ def test_float_results_partition_invariant(spark):
     import numpy as np
 
     from hetnetdb_spark import registry
+    from hetnetdb_spark.session import conf_scope
     from tests.conftest import SF_DIR
 
     registry.load_all()
@@ -278,25 +279,26 @@ def test_float_results_partition_invariant(spark):
         pdf = registry.QUERIES[name](spark, SF_DIR).toPandas()
         base[name] = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
     registry._PLAN_CACHE.clear()
     try:
-        for name in RISKY:
-            pdf = registry.QUERIES[name](spark, SF_DIR).toPandas()
-            pdf = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
-            for c in base[name].columns:
-                a, b = base[name][c].to_numpy(), pdf[c].to_numpy()
-                if a.dtype.kind == "f":
-                    same = (a == b) | (np.isnan(a) & np.isnan(b))
-                    assert same.all(), (
-                        f"{name}.{c} drifts with partitioning: "
-                        f"{a[~same][:3]} vs {b[~same][:3]}"
-                    )
-                else:
-                    assert (a == b).all(), f"{name}.{c} differs"
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "7"}):
+            for name in RISKY:
+                pdf = registry.QUERIES[name](spark, SF_DIR).toPandas()
+                # A rebuild that re-set the width would compare 32
+                # partitions with 32.
+                assert spark.conf.get("spark.sql.shuffle.partitions") == "7", name
+                pdf = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+                for c in base[name].columns:
+                    a, b = base[name][c].to_numpy(), pdf[c].to_numpy()
+                    if a.dtype.kind == "f":
+                        same = (a == b) | (np.isnan(a) & np.isnan(b))
+                        assert same.all(), (
+                            f"{name}.{c} drifts with partitioning: "
+                            f"{a[~same][:3]} vs {b[~same][:3]}"
+                        )
+                    else:
+                        assert (a == b).all(), f"{name}.{c} differs"
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
         registry._PLAN_CACHE.clear()
 
 

@@ -5,8 +5,9 @@ comparison the driver applies (row count + schema + order-insensitive
 value hash via tests/oracle_compare.assert_frames_match), all through
 a single SparkSession and a single DuckDB connection — so it also
 catches cross-query interference the per-test isolation can't
-(temp-view collisions, scratch-dir reuse, conf leakage, plan-cache
-aliasing).
+(temp-view collisions, scratch-dir reuse, plan-cache aliasing). A
+query that leaves a session setting changed fails Tier-1 itself
+(``tests/test_oracle.py``).
 
 Usage:
     python tools/driver_equiv.py                   # sf0.01, all queries
