@@ -20,22 +20,50 @@ from hetnetdb_spark.expr import r6, zround
 from hetnetdb_spark.registry import query
 
 
-def _parallel_by(spark: SparkSession, df: DataFrame, *cols: str) -> DataFrame:
-    """Pin a window shuffle to the session's configured width.
+#: Target input bytes per window-shuffle task (`_parallel_by`).
+_TASK_BYTES = 128 * 1024
 
-    AQE's byte-based coalescing (advisory 64 MB — sized for the
-    KB-payload aggregate shuffles this engine mostly runs) would
-    collapse a few-MB window shuffle to ONE partition and serialize
-    every per-key sort behind it; measured on the sf0.1 headliners
-    that is 3-4x of the query's wall time. An explicit-width
+
+def _parallel_by(spark: SparkSession, df: DataFrame, *cols: str) -> DataFrame:
+    """Repartition a window's input on ``cols`` at a width read
+    from the input's size estimate.
+
+    width = clamp(ceil(sizeInBytes / _TASK_BYTES), 1,
+    spark.sql.shuffle.partitions), where sizeInBytes is the optimized
+    plan's estimate (file metadata for scans: no Spark job). It is
+    read once at construction, so a pure query pays for it once per
+    prepared plan. The cap keeps every call site at or below the
+    configured width (an inflated estimate, say a join's product,
+    cannot widen it), and a deployment sets that ceiling through the
+    same conf. No core count is read.
+
+    Why an explicit width at all: AQE's byte-based coalescing
+    (advisory 64 MB — sized for the KB-payload aggregate shuffles
+    this engine mostly runs) would collapse a few-MB window shuffle
+    to ONE partition and serialize every per-key sort behind it;
+    measured on the sf0.1 headliners that is 3-4x of the query's
+    wall time (w02 slid 14.7x for 10x input). An explicit-width
     `repartition` satisfies the window's required distribution (so
     no second exchange appears) and is exempt from AQE coalescing.
-    Width follows spark.sql.shuffle.partitions, so a cluster
-    deployment inherits its configured parallelism instead of a
-    hardcoded number.
+
+    Why 128 KiB: `events_sessionize_30m`'s projected events input is
+    estimated at 10 KB (sf0.001), 88 KB (sf0.01) and 818 KB (sf0.1),
+    so the rule gives widths 1, 1 and 7. Single-session medians of
+    10 passes on 4 vCPU, the same result at every width:
+
+        width   sf0.001   sf0.01    sf0.1
+        32      0.453 s   0.337 s   0.347 s
+        8       0.316 s   0.211 s   0.259 s
+        4       0.210 s   0.180 s   0.266 s
+        1       0.173 s   0.193 s   0.375 s
+
+    A fixed 32 ran 33 tasks over 10 KB, and a concurrent request
+    waited for the cores they held.
     """
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return df.repartition(n, *cols)
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    width = max(1, min(cap, -(-size // _TASK_BYTES)))
+    return df.repartition(width, *cols)
 
 # --------------------------------------------------------------------------
 # W1 — ranking family
@@ -101,11 +129,12 @@ def w02_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesced to sentinels. Gap computed on epoch micros (exact
     integers) then scaled, matching DuckDB's fractional epoch().
 
-    `_parallel_by` pins the user_id window shuffle at configured
-    width: the round-5 slope run caught this query at 14.7x for 10x
-    input — AQE had coalesced its few-MB shuffle to one partition,
-    serializing every per-user sort (the same failure mode the
-    round-3 sessionize fix addressed; re-measured 1.0 flat after)."""
+    `_parallel_by` sets the user_id window shuffle's width from the
+    input's size estimate, out of AQE's reach: the round-5 slope run
+    caught this query at 14.7x for 10x input — AQE had coalesced its
+    few-MB shuffle to one partition, serializing every per-user sort
+    (the same failure mode the round-3 sessionize fix addressed;
+    re-measured 1.0 flat after)."""
     (events,) = load_tables(spark, sf_dir, "events")
     events = _parallel_by(spark, events, "user_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -140,9 +169,9 @@ def w03_running_sum_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 — per-customer running spend, explicit ROWS frame (the
     deterministic frame: with a unique tiebreaker in the ordering,
     ROWS and RANGE agree, but ROWS is the cheaper evaluator).
-    `_parallel_by` pins the custkey window shuffle at configured
-    width (w02's coalescing hazard — |custkeys| is large, so the
-    sort parallelizes fully once the width is pinned)."""
+    `_parallel_by` sizes the custkey window shuffle from the input's
+    size estimate (w02's coalescing hazard — |custkeys| is large, so
+    the sort parallelizes across that width)."""
     (orders,) = load_tables(spark, sf_dir, "orders")
     recent = orders.filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
@@ -379,7 +408,9 @@ def events_sessionize_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the one headline query whose DuckDB ratio WORSENED with scale
     (1.8×→3.9× at 30×→300×); the narrow projection (3 of 6 event
     columns through the exchange) and the single full-width pass
-    remove the superlinear trend (see CROSSOVER_r11).
+    remove the superlinear trend (see CROSSOVER_r11). The exchange's
+    width comes from the projected input's size estimate
+    (`_parallel_by`): 1 at sf0.001 and sf0.01, 7 at sf0.1.
 
     Windows run on the raw epoch-ns long (see `load_events_raw`) —
     gap arithmetic and sorting need no timestamp semantics, so
@@ -1212,9 +1243,9 @@ def w16_interval_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     are identical on both engines, and COUNT/conditional-SUM are
     integer-exact, so there is no float surface at all.
 
-    Scale: one exchange on user_id (the established `_parallel_by`
-    width concern applies to the DataFrame path; the SQL path's
-    exchange width follows spark.sql.shuffle.partitions directly),
+    Scale: one exchange on user_id (the DataFrame path sizes it from
+    the input's estimate via `_parallel_by`; this SQL path's exchange
+    starts at spark.sql.shuffle.partitions and AQE coalesces it),
     one per-partition sort, one forward pass — the window engine
     maintains a sliding frame head/tail in O(1) amortized per row.
     Registered impure: building the plan registers the events temp
@@ -1269,9 +1300,9 @@ def w17_ignore_nulls_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie (registry discipline). All-integer values; no float surface.
 
     Scale: one user_id exchange serves both frames (shared sort
-    order, forward + reverse accumulation); `_parallel_by` pins the
-    exchange width (the w02 lesson). The user_id < 200 bound only
-    caps the driver-hashed output."""
+    order, forward + reverse accumulation); `_parallel_by` sizes the
+    exchange and keeps it out of AQE coalescing (the w02 lesson).
+    The user_id < 200 bound only caps the driver-hashed output."""
     (events,) = load_tables(spark, sf_dir, "events")
     sparse = events.filter(F.col("user_id") < 200).select(
         "user_id",
@@ -1414,7 +1445,7 @@ def w19_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     operands are identical integers on both engines (the scale-free
     ratio rule).
 
-    Scale: ONE user_id exchange (pinned wide via `_parallel_by`)
+    Scale: ONE user_id exchange (sized by `_parallel_by`)
     feeds the lag window; everything after operates on |types|²
     rows. The transition matrix of a 100-TB event store costs one
     shuffle of sequence-adjacent pairs' bounded aggregates — this is

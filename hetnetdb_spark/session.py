@@ -72,9 +72,10 @@ SESSION_CONF: dict[str, str] = {
     # catalog branches on the dtype actually produced, so either
     # representation normalizes to the same µs timestamp.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Fixtures are small (≤600k rows); at 100 TB this is raised (or
-    # left to AQE's advisory target) — AQE coalescing makes the
-    # initial number a ceiling, not a commitment.
+    # A ceiling, not a commitment: AQE coalesces planner shuffles
+    # below it, and window shuffles (`windows._parallel_by`) take
+    # their width from the input's size estimate, capped here.
+    # Fixtures are small (≤600k rows); at 100 TB this is raised.
     "spark.sql.shuffle.partitions": "32",
     # Cost-based optimization + join reordering, read from the
     # statistics `catalog.register_views` collects for the SQL path.

@@ -11,6 +11,8 @@ what a count cannot.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from hetnetdb_spark import registry
@@ -118,6 +120,46 @@ def test_sessionize_single_shuffle(plans):
     assert cols is not None and set(cols) <= {"event_id", "ts", "user_id"}, (
         f"sessionize must not read payload columns; scan reads {cols}"
     )
+
+
+def _window_widths(df) -> list[int]:
+    """Widths of the `_parallel_by` exchanges in df's plan (planned,
+    not run). Spark plans a 1-wide repartition as SinglePartition,
+    which names no key; a wider one must hash on user_id."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        int(w or 1)
+        for w in re.findall(
+            r"Exchange (?:SinglePartition|hashpartitioning\(user_id#\d+L?, (\d+)\)), "
+            r"REPARTITION_BY_NUM",
+            plan,
+        )
+    ]
+
+
+def test_window_width_follows_size_estimate(spark, monkeypatch):
+    """`_parallel_by` sizes a window shuffle from its input's size
+    estimate, capped at spark.sql.shuffle.partitions: sessionize's
+    10 KB input at sf0.001 gets 1 partition, a 1-byte task target
+    hits the cap, and reading the estimate starts no Spark job."""
+    from hetnetdb_spark.operators import windows
+
+    # The registered function itself: the plan cache would hand back
+    # a plan built at another width.
+    assert _window_widths(windows.events_sessionize_30m(spark, SF_DIR)) == [1]
+
+    monkeypatch.setattr(windows, "_TASK_BYTES", 1)
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "2"}):
+        df = windows.events_sessionize_30m(spark, SF_DIR)
+    assert _window_widths(df) == [2]
+
+    tracker = spark.sparkContext.statusTracker()
+    (events,) = windows.load_tables(spark, SF_DIR, "events")
+    before = set(tracker.getJobIdsForGroup(None))
+    windows._parallel_by(spark, events, "user_id")
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    spark.range(1).count()
+    assert set(tracker.getJobIdsForGroup(None)) != before, "tracker sees no jobs"
 
 
 def test_window_top3_limits_below_shuffle(plans):
@@ -940,12 +982,23 @@ def test_j20_hints_override_strategy_choice(spark):
     assert "BroadcastHashJoin" not in plan, plan
 
 
-def test_w17_single_user_exchange(spark):
+def test_w17_single_user_exchange(spark, monkeypatch):
     """w17: forward and backward IGNORE NULLS frames must be
     computed by ONE Window node over ONE user_id hash exchange
     (shared partitioning + sort order); the only other exchange is
-    the presentation-order range sort."""
+    the presentation-order range sort. At fixture scale the window
+    shuffle is 1 wide, a single partition that also serves the sort,
+    so the plan has one exchange; a 1-byte task target widens it to
+    the hash exchange a larger input gets."""
+    from hetnetdb_spark.operators import windows
+
     plan = executed_plan(registry.QUERIES["w17_ignore_nulls_fill"](spark, SF_DIR))
+    assert shuffle_exchange_count(plan) == 1, plan
+    assert "Exchange SinglePartition, REPARTITION_BY_NUM" in plan, plan
+    assert plan.count("Window [") == 1, plan
+
+    monkeypatch.setattr(windows, "_TASK_BYTES", 1)
+    plan = executed_plan(windows.w17_ignore_nulls_fill(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("Window [") == 1, plan
 

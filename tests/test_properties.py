@@ -230,16 +230,22 @@ def test_train_test_split_invariant_to_layout(spark):
     assert base.equals(relaid)
 
 
-def test_float_results_partition_invariant(spark):
+def test_float_results_partition_invariant(spark, monkeypatch):
     """Float-valued query results must not depend on the shuffle
     partitioning: double addition is non-associative, so a SUM whose
     partials merge in topology-dependent order drifts past any
     rounding (the j11 bug class — fixed with decimal accumulation).
     Re-running under a different partition count must reproduce the
-    default-config result BITWISE."""
+    default-config result BITWISE. Window shuffles are sized from
+    the input's estimate, which gives 1 partition at fixture scale
+    under any cap; patching `_TASK_BYTES` to 1 runs each of them at
+    the 7-partition cap, so the windows vary too."""
+    import re
+
     import numpy as np
 
     from hetnetdb_spark import registry
+    from hetnetdb_spark.operators import windows
     from hetnetdb_spark.session import conf_scope
     from tests.conftest import SF_DIR
 
@@ -280,13 +286,22 @@ def test_float_results_partition_invariant(spark):
         base[name] = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
     registry._PLAN_CACHE.clear()
+    monkeypatch.setattr(windows, "_TASK_BYTES", 1)
     try:
         with conf_scope(spark, {"spark.sql.shuffle.partitions": "7"}):
             for name in RISKY:
-                pdf = registry.QUERIES[name](spark, SF_DIR).toPandas()
+                df = registry.QUERIES[name](spark, SF_DIR)
+                pdf = df.toPandas()
                 # A rebuild that re-set the width would compare 32
                 # partitions with 32.
                 assert spark.conf.get("spark.sql.shuffle.partitions") == "7", name
+                if name == "w09_rolling_zscore":
+                    plan = df._jdf.queryExecution().executedPlan().toString()
+                    assert re.search(
+                        r"Exchange hashpartitioning\(user_id#\d+L?, 7\), "
+                        r"REPARTITION_BY_NUM",
+                        plan,
+                    ), plan
                 pdf = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
                 for c in base[name].columns:
                     a, b = base[name][c].to_numpy(), pdf[c].to_numpy()
