@@ -48,8 +48,10 @@ def _parallel_by(spark: SparkSession, df: DataFrame, *cols: str) -> DataFrame:
 
     Why 128 KiB: `events_sessionize_30m`'s projected events input is
     estimated at 10 KB (sf0.001), 88 KB (sf0.01) and 818 KB (sf0.1),
-    so the rule gives widths 1, 1 and 7. Single-session medians of
-    10 passes on 4 vCPU, the same result at every width:
+    so the rule gives widths 1, 1 and 7. Prototype numbers (the rule
+    applied to commit 3372ba6, not re-measured on this code):
+    single-session medians of 10 passes on 4 vCPU, the same result
+    at every width:
 
         width   sf0.001   sf0.01    sf0.1
         32      0.453 s   0.337 s   0.347 s
@@ -134,7 +136,9 @@ def w02_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught this query at 14.7x for 10x input — AQE had coalesced its
     few-MB shuffle to one partition, serializing every per-user sort
     (the same failure mode the round-3 sessionize fix addressed;
-    re-measured 1.0 flat after)."""
+    re-measured 1.0 flat after, at the old fixed width of 32). The
+    slope has not been re-run under the size rule; at 10x and 30x
+    the sf0.1 estimate already gives the cap (32)."""
     (events,) = load_tables(spark, sf_dir, "events")
     events = _parallel_by(spark, events, "user_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

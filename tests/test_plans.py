@@ -111,7 +111,7 @@ def test_q3_filters_pushed_before_joins(plans):
     assert has_top_k(plan), "top-10 must plan as TakeOrderedAndProject"
 
 
-def test_sessionize_single_shuffle(plans):
+def test_sessionize_single_shuffle(plans, spark, monkeypatch):
     plan = plans["events_sessionize_30m"]
     assert shuffle_exchange_count(plan) == 1, (
         "one user_id shuffle must serve both windows AND the final aggregate"
@@ -120,13 +120,14 @@ def test_sessionize_single_shuffle(plans):
     assert cols is not None and set(cols) <= {"event_id", "ts", "user_id"}, (
         f"sessionize must not read payload columns; scan reads {cols}"
     )
+    plan = _plan_at_cap(spark, monkeypatch, "events_sessionize_30m")
+    assert shuffle_exchange_count(plan) == 1, plan
 
 
-def _window_widths(df) -> list[int]:
-    """Widths of the `_parallel_by` exchanges in df's plan (planned,
-    not run). Spark plans a 1-wide repartition as SinglePartition,
-    which names no key; a wider one must hash on user_id."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def _window_widths(plan: str) -> list[int]:
+    """Widths of the `_parallel_by` exchanges in a printed plan. Spark
+    plans a 1-wide repartition as SinglePartition, which names no key;
+    a wider one must hash on user_id."""
     return [
         int(w or 1)
         for w in re.findall(
@@ -135,6 +136,24 @@ def _window_widths(df) -> list[int]:
             plan,
         )
     ]
+
+
+def _plan_at_cap(spark, monkeypatch, name: str) -> str:
+    """Executed plan of the window query ``name`` with every
+    `_parallel_by` shuffle at the spark.sql.shuffle.partitions cap (a
+    1-byte task target), checked to hold exactly one such exchange,
+    hashed on user_id. At fixture scale the size estimate gives 1
+    partition, a SinglePartition exchange that satisfies any
+    downstream distribution, so a pin on one shared user_id hash
+    exchange only bites on this plan."""
+    from hetnetdb_spark.operators import windows
+
+    monkeypatch.setattr(windows, "_TASK_BYTES", 1)
+    # The module function itself: the plan cache would hand back a
+    # plan built at the fixture-scale width.
+    plan = executed_plan(getattr(windows, name)(spark, SF_DIR))
+    assert _window_widths(plan) == [int(spark.conf.get("spark.sql.shuffle.partitions"))], plan
+    return plan
 
 
 def test_window_width_follows_size_estimate(spark, monkeypatch):
@@ -146,12 +165,12 @@ def test_window_width_follows_size_estimate(spark, monkeypatch):
 
     # The registered function itself: the plan cache would hand back
     # a plan built at another width.
-    assert _window_widths(windows.events_sessionize_30m(spark, SF_DIR)) == [1]
+    assert _window_widths(executed_plan(windows.events_sessionize_30m(spark, SF_DIR))) == [1]
 
     monkeypatch.setattr(windows, "_TASK_BYTES", 1)
     with conf_scope(spark, {"spark.sql.shuffle.partitions": "2"}):
-        df = windows.events_sessionize_30m(spark, SF_DIR)
-    assert _window_widths(df) == [2]
+        plan = executed_plan(windows.events_sessionize_30m(spark, SF_DIR))
+    assert _window_widths(plan) == [2]
 
     tracker = spark.sparkContext.statusTracker()
     (events,) = windows.load_tables(spark, SF_DIR, "events")
@@ -533,7 +552,7 @@ def test_l29_centroids_no_vector_explosion(spark):
     assert "Generate" not in below_exchange, plan
 
 
-def test_w09_single_window_exchange(spark):
+def test_w09_single_window_exchange(spark, monkeypatch):
     """w09: count/avg/stddev baselines must all evaluate over ONE
     user_id exchange — hourly agg and the window reuse the same
     hash partitioning, so exactly two shuffles total (hourly agg +
@@ -541,6 +560,8 @@ def test_w09_single_window_exchange(spark):
     no per-aggregate extra exchange."""
     plan = executed_plan(registry.QUERIES["w09_rolling_zscore"](spark, SF_DIR))
     assert plan.count("WindowExec") <= 1 or plan.count("Window") <= 2, plan
+    assert shuffle_exchange_count(plan) <= 2, plan
+    plan = _plan_at_cap(spark, monkeypatch, "w09_rolling_zscore")
     assert shuffle_exchange_count(plan) <= 2, plan
 
 
@@ -770,13 +791,16 @@ def test_l38_pagerank_iteration_shape(spark):
             assert "embedding" not in ln, ln
 
 
-def test_w12_interval_merge_single_exchange(spark):
+def test_w12_interval_merge_single_exchange(spark, monkeypatch):
     """w12: one user_id shuffle must serve the running-max window,
     the island-numbering window (shared sort) and the final
     (user_id, span_id) aggregate — hash-partitioning on user_id
     satisfies the aggregate's clustered distribution, so no second
     exchange may appear."""
     plan = executed_plan(registry.QUERIES["w12_interval_merge"](spark, SF_DIR))
+    assert shuffle_exchange_count(plan) == 1, plan
+    assert plan.count("Sort [user_id") == 1, "both windows must share one sort"
+    plan = _plan_at_cap(spark, monkeypatch, "w12_interval_merge")
     assert shuffle_exchange_count(plan) == 1, plan
     assert plan.count("Sort [user_id") == 1, "both windows must share one sort"
 
@@ -855,12 +879,14 @@ def test_l46_moments_single_scan_with_partials(spark):
     assert "partial_sum" in aplan, aplan
 
 
-def test_w14_streaks_single_exchange(spark):
+def test_w14_streaks_single_exchange(spark, monkeypatch):
     """w14: collect_set day-dedup must keep the whole query on ONE
     user_id exchange (a (user_id, day) DISTINCT would force two)."""
     plan = executed_plan(registry.QUERIES["w14_activity_streaks"](spark, SF_DIR))
     assert shuffle_exchange_count(plan) == 1, plan
     assert "collect_set" in plan, plan
+    plan = _plan_at_cap(spark, monkeypatch, "w14_activity_streaks")
+    assert shuffle_exchange_count(plan) == 1, plan
 
 
 def test_w13_rolling_median_frame_is_bounded(spark):
@@ -990,15 +1016,12 @@ def test_w17_single_user_exchange(spark, monkeypatch):
     shuffle is 1 wide, a single partition that also serves the sort,
     so the plan has one exchange; a 1-byte task target widens it to
     the hash exchange a larger input gets."""
-    from hetnetdb_spark.operators import windows
-
     plan = executed_plan(registry.QUERIES["w17_ignore_nulls_fill"](spark, SF_DIR))
     assert shuffle_exchange_count(plan) == 1, plan
     assert "Exchange SinglePartition, REPARTITION_BY_NUM" in plan, plan
     assert plan.count("Window [") == 1, plan
 
-    monkeypatch.setattr(windows, "_TASK_BYTES", 1)
-    plan = executed_plan(windows.w17_ignore_nulls_fill(spark, SF_DIR))
+    plan = _plan_at_cap(spark, monkeypatch, "w17_ignore_nulls_fill")
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("Window [") == 1, plan
 
